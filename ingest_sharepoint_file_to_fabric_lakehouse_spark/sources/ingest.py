@@ -1,31 +1,38 @@
 """Ingestion subsystem (SURVEY.md §7 M3) — the reference's actual
 capability (SharePoint → lakehouse bronze), re-expressed Spark-native.
 
+The driver owns the control plane and Spark the data plane, the split
+Delta Lake makes between its transaction log and its data files.
 Pipeline (mirrors sharepoint_to_bronze_delta.py end-to-end, but
-distributed and incremental):
+incremental and with content kept executor-side):
 
-1. discover: folder listing → manifest DataFrame with per-folder
-   config (A-1/A-10/A-11; is-file filter A-9; name sanitizer A-15).
-2. incremental: manifest ANTI JOIN ingestion log on (folder, name,
-   mtime) — re-runs skip already-ingested files, and a *modified*
-   file (new mtime) is re-ingested; fixes the reference's
-   re-copy-everything behavior (SURVEY.md §4.1).
-3. transfer: ``binaryFile`` scan over the configured folders with a
-   ``modifiedAfter`` watermark pushed into file listing — only files
-   at-or-after the oldest new mtime are opened, content flows
-   executor-side, never through driver RAM (anti-pattern at
-   sharepoint_to_bronze_delta.py:166-170), and the driver sees only
-   two control-plane scalars (delta count + watermark), never a
-   path list.
-4. land: bronze parquet with (file metadata, content, sha256).
-5. log + post-commit: append ingestion log with timestamped archive
-   names (A-16, :189-191) only after the bronze write commits —
-   copy→verify→log ordering the reference lacks (:222-231).
+1. discover: one driver-side folder listing (A-1; is-file filter A-9)
+   — names, sizes and mtimes only, never content.
+2. incremental: the listing ANTI JOIN the ingestion log's
+   (folder, name, mtime) keys, read straight from the log's parquet
+   files over Arrow on the driver — re-runs skip already-ingested
+   files, and a *modified* file (new mtime) is re-ingested; fixes the
+   reference's re-copy-everything behavior (SURVEY.md §4.1).  An empty
+   delta ends the run without a Spark job.
+3. transfer: the delta rows (per-folder config A-10/A-11, quote-
+   sanitized target names A-15) become a local DataFrame joined to a
+   ``binaryFile`` scan of the configured folders, with the delta's
+   oldest mtime pushed into the file listing as a ``modifiedAfter``
+   watermark.  Content flows executor-side, never through driver RAM
+   (anti-pattern at sharepoint_to_bronze_delta.py:166-170).
+4. land: bronze parquet with (file metadata, content, sha256), one
+   run-scoped directory per run.
+5. log + post-commit: append ingestion log rows derived from the
+   committed bronze delta, with timestamped archive names (A-16,
+   :189-191) — copy→verify→log ordering the reference lacks
+   (:222-231).
 
-The "SharePoint" side is a local directory fixture (the real Graph
-connector would slot in at `list_source_files`; auth A-22 stays a
-driver-side credential provider).  Errors are isolated per file into
-a dead-letter status column (A-21), not exceptions.
+Every Spark-side read uses a pinned schema, so no read pays a
+schema-inference job.  The "SharePoint" side is a local directory
+fixture (the real Graph connector would slot in at
+`list_source_files`; auth A-22 stays a driver-side credential
+provider).  Errors are isolated per file into a dead-letter status
+column (A-21), not exceptions.
 """
 
 from __future__ import annotations
@@ -44,6 +51,28 @@ FOLDER_CONFIG = [
     ("shared", "Files/shared", True, True),
 ]
 
+# ingestion-log key: a file is ingested once per (folder, name, mtime)
+LOG_KEY = ["folder_name", "file_name", "mtime_epoch"]
+_MANIFEST_COLS = [
+    "folder_name", "file_name", "lakehouse_folder", "size_bytes", "mtime_epoch",
+]
+_MANIFEST_SCHEMA = (
+    "folder_name string, file_name string, lakehouse_folder string, "
+    "size_bytes long, mtime_epoch long"
+)
+BRONZE_SCHEMA = (
+    "folder_name string, file_name string, target_name string, "
+    "lakehouse_folder string, size_bytes long, mtime_epoch long, "
+    "content_sha256 string, status string, content binary"
+)
+LOG_SCHEMA = (
+    "folder_name string, file_name string, target_name string, "
+    "lakehouse_folder string, copy_to_archive boolean, "
+    "delete_original boolean, size_bytes long, mtime_epoch long, "
+    "content_sha256 string, status string, archive_name string, "
+    "ingested_at timestamp"
+)
+
 
 def make_source_fixture(root: str) -> None:
     """Deterministic mock document library (3 folders, 9 files)."""
@@ -55,7 +84,7 @@ def make_source_fixture(root: str) -> None:
     for folder, files in contents.items():
         d = os.path.join(root, folder)
         os.makedirs(d, exist_ok=True)
-        for name, data in files.items() if isinstance(files, dict) else [(n, c) for n, c in files]:
+        for name, data in files:
             with open(os.path.join(d, name), "wb") as f:
                 f.write(data)
 
@@ -83,37 +112,32 @@ def list_source_files(root: str, folders: list[str]) -> list[dict]:
     return rows
 
 
-def discover_manifest(spark: SparkSession, root: str) -> DataFrame:
-    """Listing → typed manifest DataFrame (A-10/A-11): per-folder
-    config joined in, quote-sanitized target names (A-15), boolean
-    flags typed at the edge (A-17)."""
-    import pandas as pd
+def logged_keys(log_path: str) -> set[tuple]:
+    """(folder, name, mtime) of every committed ingestion-log row, read
+    over Arrow on the driver (three small columns; the log is
+    control-plane state, like a Delta transaction log).
 
-    listing = list_source_files(root, [f for f, *_ in FOLDER_CONFIG])
-    schema = (
-        "file_name string, folder_name string, file_path string, "
-        "size_bytes long, mtime_epoch long"
-    )
-    fcols = ["file_name", "folder_name", "file_path", "size_bytes", "mtime_epoch"]
-    # pandas + Arrow conversion: stays JVM-side after the driver handoff
-    # (a list-of-tuples createDataFrame would pickle to a Python RDD and
-    # pay Python-worker spin-up on every downstream action)
-    files = (
-        spark.createDataFrame(
-            pd.DataFrame([tuple(r[c] for c in fcols) for r in listing], columns=fcols),
-            schema,
-        )
-        if listing
-        else spark.createDataFrame([], schema)
-    )
-    ccols = ["folder_name", "lakehouse_folder", "copy_to_archive", "delete_original"]
-    cfg = spark.createDataFrame(
-        pd.DataFrame(FOLDER_CONFIG, columns=ccols),
-        "folder_name string, lakehouse_folder string, copy_to_archive boolean, delete_original boolean",
-    )
-    return files.join(F.broadcast(cfg), "folder_name").withColumn(
-        "target_name", F.regexp_replace("file_name", "'", "_")
-    )
+    Only a missing log, or one holding no committed file (files under
+    ``_temporary`` and other ``_``/``.``-prefixed names are ignored,
+    as Spark's reader ignores them), means "first run, ingest all".
+    Any other IO error or an unreadable file raises: silently
+    reclassifying the whole source as new would duplicate every file
+    into bronze."""
+    import pyarrow.dataset as ds
+
+    try:
+        log = ds.dataset(log_path, format="parquet")
+    except FileNotFoundError:
+        return set()
+    if not log.files:
+        return set()
+    keys = log.to_table(columns=LOG_KEY)
+    return set(zip(*(keys.column(c).to_pylist() for c in LOG_KEY)))
+
+
+def read_log(spark: SparkSession, log_path: str) -> DataFrame:
+    """The ingestion log as a DataFrame, read with its pinned schema."""
+    return spark.read.schema(LOG_SCHEMA).parquet(log_path)
 
 
 def run_ingest(
@@ -121,74 +145,34 @@ def run_ingest(
     source_root: str,
     bronze_root: str,
     run_ts: str = "2024-06-01 12:00:00",
-    shuffle_width: int | None = None,
 ) -> DataFrame:
     """One incremental ingest run; returns the full current ingestion log.
 
     ``run_ts`` is an injected clock (Asia/Kuala_Lumpur wall time in the
     reference, :116-122) so archive names are deterministic in tests.
     """
-    # The whole run is sized by the per-run DELTA listing, not the
-    # corpus: 32 shuffle tasks over a 9-row manifest is pure scheduler
-    # latency (4 measured 2.1 s → 1.85 s; 1 shaves another ~0.3 s of
-    # task-launch overhead across the pipeline's ~10 jobs).  Shuffle
-    # width is therefore a TUNING PARAMETER derived from the delta
-    # size (the driver-side listing is already in hand, so the
-    # estimate is free): ~10k manifest rows per task, capped at the
-    # session's parallelism — at a real 100 TB ingest with millions of
-    # changed files this lands at full cluster width, while the
-    # fixture-scale delta keeps the measured width-1 fast path.
-    # Callers with better knowledge (e.g. a known-huge backfill) pass
-    # an explicit width.
-    if shuffle_width is None:
-        n_delta = len(list_source_files(source_root, [f for f, *_ in FOLDER_CONFIG]))
-        shuffle_width = max(
-            1, min(spark.sparkContext.defaultParallelism, n_delta // 10_000 + 1)
-        )
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_width))
-    try:
-        return _run_ingest_inner(spark, source_root, bronze_root, run_ts)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+    import pandas as pd
 
-
-def _run_ingest_inner(
-    spark: SparkSession,
-    source_root: str,
-    bronze_root: str,
-    run_ts: str,
-) -> DataFrame:
     log_path = os.path.join(bronze_root, "_ingestion_log")
     bronze_path = os.path.join(bronze_root, "bronze_files")
-    manifest = discover_manifest(spark, source_root)
+    seen = logged_keys(log_path)
+    # (folder, name, mtime) key: unseen files AND seen-but-modified
+    # files (new mtime) both survive the anti-join and re-ingest.
+    lakehouse = {f: lf for f, lf, *_ in FOLDER_CONFIG}
+    delta = [
+        (r["folder_name"], r["file_name"], lakehouse[r["folder_name"]], r["size_bytes"], r["mtime_epoch"])
+        for r in list_source_files(source_root, list(lakehouse))
+        if tuple(r[c] for c in LOG_KEY) not in seen
+    ]
+    if not delta:
+        return read_log(spark, log_path)
 
-    # Narrow catch: only a MISSING log means "first run, ingest all".
-    # A transient IO/permission error must surface, not silently
-    # reclassify the whole source as new (which would duplicate every
-    # file into bronze on a 100 TB ingest).
-    from pyspark.errors import AnalysisException
-
-    try:
-        log = spark.read.parquet(log_path)
-        # (folder, name, mtime) key: unseen files AND seen-but-modified
-        # files (new mtime) both survive the anti-join and re-ingest.
-        new_files = manifest.join(
-            log.select("folder_name", "file_name", "mtime_epoch"),
-            ["folder_name", "file_name", "mtime_epoch"],
-            "left_anti",
-        )
-    except AnalysisException:
-        new_files = manifest  # first run: no log written yet
-
-    # Control-plane scalars only cross to the driver — a count and a
-    # min-mtime watermark — never a data-proportional path list (at
-    # 100 TB-scale ingest the per-run delta can be millions of files).
-    stats = new_files.agg(
-        F.count("*").alias("n"), F.min("mtime_epoch").alias("wm")
-    ).first()
-    if stats["n"] == 0:
-        return spark.read.parquet(log_path)
+    # pandas + Arrow conversion lands as a JVM-side LocalRelation (a
+    # list-of-tuples createDataFrame would pickle to a Python RDD and
+    # pay Python-worker spin-up)
+    new_files = spark.createDataFrame(
+        pd.DataFrame(delta, columns=_MANIFEST_COLS), _MANIFEST_SCHEMA
+    ).withColumn("target_name", F.regexp_replace("file_name", "'", "_"))
 
     # executor-side content scan bounded to the new files (A-2,
     # distributed): the binaryFile source pushes `modifiedAfter` down
@@ -196,17 +180,20 @@ def _run_ingest_inner(
     # mtime are even opened (-1s: the listing's mtime_epoch floors the
     # filesystem's sub-second mtime, and modifiedAfter is strictly
     # greater-than).  Already-ingested stragglers inside that window
-    # are dropped by the join back to `new_files` below.  Scanned
-    # roots come from FOLDER_CONFIG (static config), so excluded
-    # folders (the reference's Teams-Wiki filter) are never listed.
+    # are dropped by the join back to `new_files` below, and a delta
+    # file that vanished before the scan keeps its row as a dead
+    # letter.  Scanned roots come from FOLDER_CONFIG (static config),
+    # so excluded folders (the reference's Teams-Wiki filter) are
+    # never listed.
     from datetime import datetime, timezone
 
-    wm = datetime.fromtimestamp(int(stats["wm"]) - 1, tz=timezone.utc).strftime(
+    oldest = min(mtime for *_, mtime in delta)
+    wm = datetime.fromtimestamp(oldest - 1, tz=timezone.utc).strftime(
         "%Y-%m-%dT%H:%M:%S"
     )
     roots = [
         os.path.join(source_root, f)
-        for f, *_ in FOLDER_CONFIG
+        for f in lakehouse
         if os.path.isdir(os.path.join(source_root, f))
     ]
     blobs = (
@@ -215,9 +202,14 @@ def _run_ingest_inner(
         .load(roots)
         .withColumn("file_name", F.element_at(F.split("path", "/"), -1))
         .withColumn("folder_name", F.element_at(F.split("path", "/"), -2))
-        .select("folder_name", "file_name", "length", "content")
+        .select("folder_name", "file_name", "content")
     )
-    landed = new_files.join(blobs, ["folder_name", "file_name"], "left").select(
+    # The merge hint pins a shuffle join: the preserved (delta) side of
+    # an outer join cannot be broadcast, so without it the planner
+    # broadcasts the scan — every content byte through driver RAM.
+    landed = new_files.join(
+        blobs.hint("merge"), ["folder_name", "file_name"], "left"
+    ).select(
         "folder_name",
         "file_name",
         "target_name",
@@ -247,32 +239,24 @@ def _run_ingest_inner(
     # post-commit log append with timestamped archive names (A-16
     # :189-191): copy→verify→log ordering — the log row is derived from
     # what actually landed, not from what we intended to land.
-    import pandas as pd
-
-    flags = spark.createDataFrame(
-        pd.DataFrame(
-            [(f, a, d) for f, _lf, a, d in FOLDER_CONFIG],
-            columns=["folder_name", "copy_to_archive", "delete_original"],
-        ),
-        "folder_name string, copy_to_archive boolean, delete_original boolean",
-    )
+    archived = [f for f, _lf, a, _d in FOLDER_CONFIG if a]
+    deleted = [f for f, _lf, _a, d in FOLDER_CONFIG if d]
     ts = F.to_timestamp(F.lit(run_ts))
     log_delta = (
-        spark.read.parquet(delta_path)
-        .drop("content")  # column pruning: content bytes never re-read
-        .join(F.broadcast(flags), "folder_name")
+        spark.read.schema(BRONZE_SCHEMA)
+        .parquet(delta_path)
         .select(
             "folder_name",
             "file_name",
             "target_name",
             "lakehouse_folder",
-            "copy_to_archive",
-            "delete_original",
+            F.col("folder_name").isin(archived).alias("copy_to_archive"),
+            F.col("folder_name").isin(deleted).alias("delete_original"),
             "size_bytes",
             "mtime_epoch",
             "content_sha256",
             "status",
-        )
+        )  # column pruning: content bytes never re-read
         .withColumn(
             "archive_name",
             F.when(
@@ -285,7 +269,7 @@ def _run_ingest_inner(
         .withColumn("ingested_at", ts)
     )
     log_delta.write.mode("append").parquet(log_path)
-    return spark.read.parquet(log_path)
+    return read_log(spark, log_path)
 
 
 @query(
@@ -349,7 +333,7 @@ def ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.utime(changed, (4102444800, 4102444800))  # 2100-01-01, > any real mtime
         run_ingest(spark, src, bronze, run_ts="2024-06-02 09:00:00")
         _stamp_drained(base, token)
-    log = spark.read.parquet(os.path.join(bronze, "_ingestion_log"))
+    log = read_log(spark, os.path.join(bronze, "_ingestion_log"))
     return log.select(
         "folder_name",
         "file_name",
