@@ -497,13 +497,13 @@ def main() -> None:
         from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import (
             docs as _docs,
             read_staged as _read_staged,
+            staging_dir as _staging_dir,
         )
 
         pw0 = time.time()
         _docs(spark, sf_dir).count()
         touched = ["docs_checkpoint"]
-        staged_base = f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}"
-        for stamp in sorted(_glob.glob(f"{staged_base}/*/_SG_FINGERPRINT")):
+        for stamp in sorted(_glob.glob(f"{_staging_dir(sf_dir, '*')}/_SG_FINGERPRINT")):
             art = os.path.dirname(stamp)
             try:
                 _read_staged(spark, art).count()
@@ -895,7 +895,7 @@ def main() -> None:
         round(_median_key_sec / calib_sec, 4) if calib_sec else None
     )
 
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    sf = os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")
     try:
         sf_val = float(sf)
     except ValueError:

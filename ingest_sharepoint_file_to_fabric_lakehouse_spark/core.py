@@ -289,6 +289,26 @@ def source_fingerprint(sf_dir: str, *tables: str) -> str:
     return h.hexdigest()
 
 
+# Staged state lives at <root>/<fixture dir name>/<name>.  Derived
+# indexes, layouts and the ingest lifecycle stage under STAGING_ROOT.
+STAGING_ROOT = "/tmp/sgdata"
+# Streaming scratch (checkpoint logs, epoch outputs, staged batch
+# files) is many small fsync-heavy writes; on the bench host /tmp is
+# disk-backed while /dev/shm is tmpfs, and the whole streaming staging
+# footprint is a few MB — so the fixed per-micro-batch cost drops
+# substantially on the RAM disk.  Purely I/O placement: a cluster
+# deployment points checkpoints at durable storage instead (this
+# scratch is all reconstructible, nothing durable lives here).
+SCRATCH_ROOT = "/dev/shm/sgdata" if os.path.isdir("/dev/shm") else STAGING_ROOT
+
+
+def staging_dir(sf_dir: str, name: str, root: str = STAGING_ROOT) -> str:
+    """Directory of the staged artifact ``name`` derived from the
+    fixture at ``sf_dir`` — the one place the staging layout is
+    spelled out."""
+    return f"{root}/{os.path.basename(sf_dir.rstrip('/'))}/{name}"
+
+
 def staging_current(path: str, token: str) -> bool:
     """True iff the staged layout at ``path`` is complete (``_SUCCESS``)
     AND its recorded fingerprint matches ``token``."""

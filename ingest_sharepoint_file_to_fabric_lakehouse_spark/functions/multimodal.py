@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..core import query, t
+from ..core import query, staging_dir, t
 
 
 def _fake_decode_image(content: bytes) -> dict:
@@ -190,7 +190,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     via the mapInPandas kernel.  Strong check: blobs are deterministic
     (byte period 251 ⇒ every frame distinct), so the oracle is the
     literal expected (file, frame_idx, size, sha256) table."""
-    stage = f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}/video"
+    stage = staging_dir(sf_dir, "video")
     os.makedirs(stage, exist_ok=True)
     for i in range(3):
         with open(f"{stage}/clip_{i}.fakemp4", "wb") as f:
@@ -225,7 +225,7 @@ def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     via the mapInPandas extraction kernel.  Strong check: blobs are
     deterministic, so the oracle is the literal expected metadata table
     (including the digest-derived fake decoder dimensions)."""
-    stage = f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}/media"
+    stage = staging_dir(sf_dir, "media")
     os.makedirs(stage, exist_ok=True)
     for i in range(6):
         with open(f"{stage}/img_{i}.fake", "wb") as f:
@@ -362,7 +362,7 @@ def multimodal_embed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    stage = f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}/blobs_ascii"
+    stage = staging_dir(sf_dir, "blobs_ascii")
     os.makedirs(stage, exist_ok=True)
     for i in range(8):
         p = f"{stage}/doc_{i}.bin"
@@ -444,7 +444,7 @@ def multimodal_resize_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumes — the decode-by-metadata contract of a real image
     pipeline (a compressed format would carry them in the header).
     """
-    stage = f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}/media_raw"
+    stage = staging_dir(sf_dir, "media_raw")
     os.makedirs(stage, exist_ok=True)
     for i in range(4):
         w, h = 16 + 4 * i, 12 + 3 * i

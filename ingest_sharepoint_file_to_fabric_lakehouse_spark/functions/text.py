@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..core import docs, query, read_staged, t
+from ..core import docs, query, read_staged, staging_dir, t
 
 
 @query(
@@ -284,13 +284,9 @@ def text_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint: same materialization boundary, plus steady-state
     # scoring skips the explode pass entirely and a regenerated
     # fixture rebuilds via the gate).
-    import os as _os
-
     from ..core import source_fingerprint, staged_build
 
-    docbg_path = (
-        f"/tmp/sgdata/{_os.path.basename(sf_dir.rstrip('/'))}/lm_docbg_v1"
-    )
+    docbg_path = staging_dir(sf_dir, "lm_docbg_v1")
     token = source_fingerprint(sf_dir, "documents")
     with staged_build(spark, token, docbg_path) as need:
         if need:
@@ -415,13 +411,11 @@ def boiler_shingle_layouts(
     functions of the corpus (the boilerplate index a curation pipeline
     maintains), fingerprint-gated like the other staged indexes.
     Returns ``(sh, dfreq)``."""
-    import os as _os
-
     from ..core import source_fingerprint, staged_build
     from ..operators.dedup import shingles
 
-    base = f"/tmp/sgdata/{_os.path.basename(sf_dir.rstrip('/'))}"
-    sh_path, df_path = f"{base}/boiler_sh3_v1", f"{base}/boiler_df3_v1"
+    sh_path = staging_dir(sf_dir, "boiler_sh3_v1")
+    df_path = staging_dir(sf_dir, "boiler_df3_v1")
     token = source_fingerprint(sf_dir, "documents")
     with staged_build(spark, token, sh_path, df_path) as need:
         if need:

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..core import dec, money, query, t
+from ..core import dec, money, query, staging_dir, t
 
 
 @query(
@@ -463,7 +463,7 @@ def agg_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    stage = f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}/rollup_orders_daily"
+    stage = staging_dir(sf_dir, "rollup_orders_daily")
     if not os.path.isdir(stage):
         (
             t(spark, sf_dir, "orders")
@@ -592,8 +592,6 @@ def agg_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the full-history GROUP BY — incremental maintenance must
     be indistinguishable from recomputation.
     """
-    import os
-
     from ..core import source_fingerprint, staged_build
 
     cutoff = "1997-01-01"
@@ -605,7 +603,7 @@ def agg_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     o = t(spark, sf_dir, "orders")
-    path = f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}/incr_agg_state"
+    path = staging_dir(sf_dir, "incr_agg_state")
     token = source_fingerprint(sf_dir, "orders") + f"|cutoff={cutoff}|v1"
     with staged_build(spark, token, path) as need:
         if need:

@@ -759,14 +759,7 @@ def events_cooccurrence_lift(
             if source_bytes(sf_dir, "lineitem") > 256 << 20
             else 1
         )
-    import os as _os
-
-    from ..core import (
-        read_staged,
-        source_fingerprint,
-        staged_build,
-        staging_current,
-    )
+    from ..core import read_staged, source_fingerprint, staged_build, staging_dir
 
     # The scored pair relation (item_a, item_b, n_pair, n_a, n_b, plus
     # the basket-count scalar as a constant column) is a pure function
@@ -779,20 +772,10 @@ def events_cooccurrence_lift(
     # the path) changes.  Exact BIGINT counts round-trip parquet
     # losslessly, so warm output is bit-identical to a fresh build
     # (pinned by test_cooccurrence_staged_index_matches_fresh_build).
-    idx_path = (
-        f"/tmp/sgdata/{_os.path.basename(sf_dir.rstrip('/'))}"
-        f"/cooccur_idx_v1_ms{min_support}_cap{max_basket_items}"
+    idx_path = staging_dir(
+        sf_dir, f"cooccur_idx_v1_ms{min_support}_cap{max_basket_items}"
     )
     token = source_fingerprint(sf_dir, "lineitem")
-    if staging_current(idx_path, token):
-        scored_pairs = read_staged(spark, idx_path)
-        return (
-            scored_pairs.withColumn("lift_ppm", F.expr(LIFT_PPM_BIGINT))
-            .select("item_a", "item_b", "n_pair", "n_a", "n_b", "lift_ppm")
-            .orderBy(F.col("n_pair").desc(), "item_a", "item_b")
-            .limit(50)
-        )
-
     with staged_build(spark, token, idx_path) as need:
         if need:
             scored_pairs = _cooccur_scored_pairs(

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..core import docs, query, read_staged, t
+from ..core import docs, query, read_staged, staging_dir, t
 
 
 @query(
@@ -392,12 +392,10 @@ def _dedup_cluster_components(
     # maintains — so both are STAGED fingerprint-gated layouts; steady
     # state reads them instead of re-hashing the corpus (12 md5s per
     # shingle is the pipeline's dominant map-side cost).
-    import os as _os
-
     from ..core import source_fingerprint, staged_build
 
-    base = f"/tmp/sgdata/{_os.path.basename(sf_dir.rstrip('/'))}"
-    canon_path, sig_path = f"{base}/cdp_canon_v1", f"{base}/cdp_sigs_v1"
+    canon_path = staging_dir(sf_dir, "cdp_canon_v1")
+    sig_path = staging_dir(sf_dir, "cdp_sigs_v1")
     token = source_fingerprint(sf_dir, "documents")
     with staged_build(spark, token, canon_path, sig_path) as need:
         if need:

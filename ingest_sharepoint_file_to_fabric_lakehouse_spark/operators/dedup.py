@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..core import docs, query, read_staged, staged_file_width, t
+from ..core import docs, query, read_staged, staged_file_width, staging_dir, t
 
 
 @query(
@@ -574,13 +574,9 @@ def dedup_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from an eager localCheckpoint: same materialization boundary and
     # lineage truncation, plus steady-state runs skip the projection
     # entirely and a regenerated fixture rebuilds via the gate).
-    import os as _os
-
     from ..core import source_fingerprint, staged_build
 
-    sig_path = (
-        f"/tmp/sgdata/{_os.path.basename(sf_dir.rstrip('/'))}/minhash_sigs_v1"
-    )
+    sig_path = staging_dir(sf_dir, "minhash_sigs_v1")
     token = source_fingerprint(sf_dir, "documents")
     with staged_build(spark, token, sig_path) as need:
         if need:
@@ -809,17 +805,13 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1).  Candidates: equal 16-bit band (4 bands ⇒ catches
     Hamming ≤ 3).
     """
-    import os as _os
-
     from ..core import source_fingerprint, staged_build
 
     # The banded signature relation is a pure function of the corpus —
     # a production SimHash dedup maintains it as its index — so it is
     # a STAGED fingerprint-gated layout: steady state reads ~#docs x 4
     # small rows instead of re-running the 64-way bit-vote aggregate.
-    sig_path = (
-        f"/tmp/sgdata/{_os.path.basename(sf_dir.rstrip('/'))}/simhash_sigs_v1"
-    )
+    sig_path = staging_dir(sf_dir, "simhash_sigs_v1")
     token = source_fingerprint(sf_dir, "documents")
     with staged_build(spark, token, sig_path) as need:
         if need:
@@ -1322,11 +1314,8 @@ def dedup_jaccard_prefix(
     # left lazy can be evicted mid-query late in a long session and
     # silently degrade to recomputing the whole window subtree
     # (measured 6s -> 60s on the same code+data).
-    import os as _os
-
     from ..core import source_fingerprint, staged_build
 
-    base = f"/tmp/sgdata/{_os.path.basename(sf_dir.rstrip('/'))}"
     # Three staged artifacts — the whole steady-state read set:
     #   jp_prefix_v4   (doc_id, sid, rn, n_sh)      the probe prefix,
     #                                               dictionary-encoded:
@@ -1356,9 +1345,9 @@ def dedup_jaccard_prefix(
     # see the verify commentary), so a different cap is a different
     # artifact.
     pfx_path, se_path, ds_path = (
-        f"{base}/jp_prefix_v4",
-        f"{base}/jp_shenc_v2",
-        f"{base}/jp_docsets_v2_c{large_doc_cap}",
+        staging_dir(sf_dir, "jp_prefix_v4"),
+        staging_dir(sf_dir, "jp_shenc_v2"),
+        staging_dir(sf_dir, f"jp_docsets_v2_c{large_doc_cap}"),
     )
     token = source_fingerprint(sf_dir, "documents")
     with staged_build(spark, token, pfx_path, se_path, ds_path) as need:
@@ -1863,15 +1852,13 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides from the raw table, which also proves the staged index
     equals recomputation.
     """
-    import os as _os
-
     from ..core import source_fingerprint, staged_build
 
     d = docs(spark, sf_dir).filter(F.col("doc_id") < 1000)
     base = d.filter(F.col("doc_id") % 10 != 0)
     delta = d.filter(F.col("doc_id") % 10 == 0)
 
-    idx_path = f"/tmp/sgdata/{_os.path.basename(sf_dir.rstrip('/'))}/minhash_index_v1"
+    idx_path = staging_dir(sf_dir, "minhash_index_v1")
     token = source_fingerprint(sf_dir, "documents")
     with staged_build(spark, token, idx_path) as need:
         if need:
@@ -2004,13 +1991,9 @@ def dedup_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # amortized over every (bands, rows) configuration being tuned —
     # so it is a STAGED fingerprint-gated layout like the other
     # derived indexes.
-    import os as _os
-
     from ..core import source_fingerprint, staged_build
 
-    truth_path = (
-        f"/tmp/sgdata/{_os.path.basename(sf_dir.rstrip('/'))}/lsh_eval_truth_v1"
-    )
+    truth_path = staging_dir(sf_dir, "lsh_eval_truth_v1")
     token = source_fingerprint(sf_dir, "documents")
     with staged_build(spark, token, truth_path) as need:
         if need:

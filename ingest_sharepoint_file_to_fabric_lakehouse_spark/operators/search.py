@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..core import docs, query, t
+from ..core import docs, query, staging_dir, t
 
 _BM25_TERMS = ("vector", "stream", "window")
 _BM25_SQL = """
@@ -84,15 +84,13 @@ def _bm25_index(spark: SparkSession, sf_dir: str):
     crossJoin form they replace).
     """
     import json as _json
-    import os as _os
 
     from ..core import read_staged, source_fingerprint, staged_build
 
-    base = f"/tmp/sgdata/{_os.path.basename(sf_dir.rstrip('/'))}"
     tf_path, df_path, dl_path = (
-        f"{base}/bm25_tf_v1",
-        f"{base}/bm25_df_v1",
-        f"{base}/bm25_dl_v1",
+        staging_dir(sf_dir, "bm25_tf_v1"),
+        staging_dir(sf_dir, "bm25_df_v1"),
+        staging_dir(sf_dir, "bm25_dl_v1"),
     )
     token = source_fingerprint(sf_dir, "documents")
     with staged_build(spark, token, tf_path, df_path, dl_path) as need:

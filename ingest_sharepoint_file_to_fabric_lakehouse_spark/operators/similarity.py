@@ -26,7 +26,7 @@ from ..core import (
     source_fingerprint,
     staged_build,
     staged_file_width,
-    staging_current,
+    staging_dir,
     t,
 )
 
@@ -177,9 +177,7 @@ def _staged_banded(
     instead of re-hashing 36 planes over the corpus (the same staging
     discipline as the IVF cells and the PPJoin prefix).  ``build`` is
     a thunk returning the banded DataFrame."""
-    import os as _os
-
-    path = f"/tmp/sgdata/{_os.path.basename(sf_dir.rstrip('/'))}/{name}"
+    path = staging_dir(sf_dir, name)
     token = source_fingerprint(sf_dir, "embeddings")
     with staged_build(spark, token, path) as need:
         if need:
@@ -591,9 +589,7 @@ def _staged_ivf_cells(spark: SparkSession, sf_dir: str, best_cells) -> DataFrame
     Cold run pays one assignment pass + write; every warm run — and
     every key that probes cells — reads only the probed directories.
     """
-    import os
-
-    path = f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}/ivf_cells"
+    path = staging_dir(sf_dir, "ivf_cells")
     token = source_fingerprint(sf_dir, "embeddings")
     with staged_build(spark, token, path) as need:
         if need:
@@ -867,16 +863,12 @@ def sim_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a corpus sample; the measured recall bounds what the banded
     probe will miss at full scale.
     """
-    import os
-
     # Exact top-10 ground truth is a pure function of the embeddings
     # table and the expensive half of the harness (full-corpus scoring
     # per query); like dedup_lsh_eval's Jaccard truth it is a STAGED
     # fingerprint-gated layout, amortized over every (bands, bits)
     # configuration being tuned.
-    truth_path = (
-        f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}/lsh_recall_truth_v1"
-    )
+    truth_path = staging_dir(sf_dir, "lsh_recall_truth_v1")
     token = source_fingerprint(sf_dir, "embeddings")
     with staged_build(spark, token, truth_path) as need:
         if need:
@@ -1020,7 +1012,6 @@ def sim_kmeans_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kmeans_body(spark: SparkSession, sf_dir: str, k: int, iters: int) -> DataFrame:
     import json as _json
-    import os as _os
 
     e = t(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("v")
@@ -1070,10 +1061,7 @@ def _kmeans_body(spark: SparkSession, sf_dir: str, k: int, iters: int) -> DataFr
     # test_kmeans_staged_codebook_matches_fresh_training).  At 100 TB
     # the codebook is exactly the artifact a vector platform persists:
     # train once, serve assignment map-side everywhere.
-    code_path = (
-        f"/tmp/sgdata/{_os.path.basename(sf_dir.rstrip('/'))}"
-        f"/kmeans_codebook_v1_k{k}_i{iters}"
-    )
+    code_path = staging_dir(sf_dir, f"kmeans_codebook_v1_k{k}_i{iters}")
     token = source_fingerprint(sf_dir, "embeddings")
     trained = None
     with staged_build(spark, token, code_path) as need:
@@ -1275,12 +1263,8 @@ def _pq_train(spark: SparkSession, sf_dir: str, sv: DataFrame) -> list:
     import json as _json
     import os as _os
 
-    cb_dir = f"/tmp/sgdata/{_os.path.basename(sf_dir.rstrip('/'))}/pq_codebook_v1"
+    cb_dir = staging_dir(sf_dir, "pq_codebook_v1")
     cb_file = f"{cb_dir}/codebook.json"
-    if staging_current(cb_dir, ck[1]) and _os.path.isfile(cb_file):
-        with open(cb_file) as fh:
-            _PQ_CB_CACHE[ck] = _json.load(fh)
-        return _PQ_CB_CACHE[ck]
     # Stamped-current but codebook.json externally removed: the repair
     # MUST run under the build lease, and staged_build's lock-free fast
     # path would skip the lock when every stamp is current.  The
@@ -1330,7 +1314,7 @@ def _pq_train(spark: SparkSession, sf_dir: str, sv: DataFrame) -> list:
                 _json.dump(_PQ_CB_CACHE[ck], fh)
             # staging_current requires the parquet-style completion marker
             open(f"{cb_dir}/_SUCCESS", "w").close()
-    if ck not in _PQ_CB_CACHE:  # raced: another builder won the lease
+    if ck not in _PQ_CB_CACHE:  # warm, or another builder won the lease
         with open(cb_file) as fh:
             _PQ_CB_CACHE[ck] = _json.load(fh)
     return _PQ_CB_CACHE[ck]
@@ -1446,9 +1430,7 @@ def _pq_code_index(
     cells).  Build is the one map-side pass documented in
     ``sim_topk_ivfpq``: cell + all 8 codes in the pre-explode
     projection so the Generate replicates finished values."""
-    import os as _os
-
-    path = f"/tmp/sgdata/{_os.path.basename(sf_dir.rstrip('/'))}/pq_codes_v2"
+    path = staging_dir(sf_dir, "pq_codes_v2")
     token = source_fingerprint(sf_dir, "embeddings")
     with staged_build(spark, token, path) as need:
         if need:

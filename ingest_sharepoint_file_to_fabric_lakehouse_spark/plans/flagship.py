@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..core import dec, money, query, t
+from ..core import dec, money, query, staging_dir, t
 
 FLAGSHIP_ORACLE = """
 SELECT
@@ -1001,12 +1001,9 @@ def _supply_view(spark: SparkSession, sf_dir: str) -> None:
     gate); the build pass is attributed via stamp_staging so bench
     cold-build accounting sees it.
     """
-    import os as _os
-
     from ..core import read_staged, source_fingerprint, staged_build
 
-    base = f"/tmp/sgdata/{_os.path.basename(sf_dir.rstrip('/'))}"
-    path = f"{base}/tpch_supply_v1"
+    path = staging_dir(sf_dir, "tpch_supply_v1")
     token = source_fingerprint(sf_dir, "lineitem")
     with staged_build(spark, token, path) as need:
         if need:

@@ -21,12 +21,9 @@ from ..core import (
     source_fingerprint,
     staged_build,
     staging_current,
+    staging_dir,
     t,
 )
-
-
-def _staging(sf_dir: str) -> str:
-    return f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}"
 
 
 @query(
@@ -51,12 +48,13 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import shutil
 
-    wh = f"{_staging(sf_dir)}/warehouse"
+    wh = staging_dir(sf_dir, "warehouse")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS sg_bucketed LOCATION '{wh}'")
     # sf-scoped table names: one session may touch several scale
     # factors (tests vs bench), and an un-scoped name would silently
-    # reuse the first sf's layout for the second
-    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    # reuse the first sf's layout for the second (the tag is the
+    # fixture's staging dir name, the parent of the warehouse)
+    sf_tag = os.path.basename(os.path.dirname(wh)).replace(".", "_")
     li_tbl, o_tbl = f"sg_bucketed.lineitem_b_{sf_tag}", f"sg_bucketed.orders_b_{sf_tag}"
 
     def ensure_bucketed(tbl: str, src: str, cols: list[str], key: str) -> None:
@@ -130,7 +128,7 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-pruned scan over the year-partitioned layout: the
     filter on the partition column prunes directories before any IO —
     the plan lists exactly one partition (verified in tests)."""
-    path = f"{_staging(sf_dir)}/orders_by_year"
+    path = staging_dir(sf_dir, "orders_by_year")
     token = source_fingerprint(sf_dir, "orders")
     with staged_build(spark, token, path) as need:
         if need:
@@ -175,7 +173,7 @@ def scan_rowgroup_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout is fingerprint-gated like every staged layout; the sort is
     paid once at write time — the same trade as bucketing.
     """
-    path = f"{_staging(sf_dir)}/orders_by_date_sorted"
+    path = staging_dir(sf_dir, "orders_by_date_sorted")
     token = source_fingerprint(sf_dir, "orders")
     with staged_build(spark, token, path) as need:
         if need:
@@ -225,7 +223,7 @@ def join_dynamic_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     import pandas as pd
 
-    path = f"{_staging(sf_dir)}/orders_by_year"
+    path = staging_dir(sf_dir, "orders_by_year")
     token = source_fingerprint(sf_dir, "orders")
     with staged_build(spark, token, path) as need:
         if need:
@@ -247,7 +245,7 @@ def join_dynamic_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame
     # relation.  That is also the honest production shape: the fact
     # side never knows which members survive the dim filter until
     # runtime.
-    dim_path = f"{_staging(sf_dir)}/year_dim"
+    dim_path = staging_dir(sf_dir, "year_dim")
     with staged_build(spark, "year-dim-v2", dim_path) as need:
         if need:
             spark.createDataFrame(
@@ -318,7 +316,7 @@ def sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula the oracle replays via scalar subqueries over the source
     table), so correctness shows the rewrite lost nothing.
     """
-    path = f"{_staging(sf_dir)}/zorder_orders"
+    path = staging_dir(sf_dir, "zorder_orders")
     token = source_fingerprint(sf_dir, "orders")
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey",

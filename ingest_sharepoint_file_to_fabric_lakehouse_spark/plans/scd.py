@@ -18,12 +18,10 @@ a partition-pruned scan.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..core import query, t
+from ..core import query, staging_dir, t
 
 
 def scd2_apply(
@@ -97,7 +95,7 @@ def sink_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result table, read it back.  The oracle replays the identical
     close+insert logic in SQL — every closed row, replacement row, and
     untouched row is value-checked."""
-    base = f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}/scd2_dim"
+    base = staging_dir(sf_dir, "scd2_dim")
     dim = t(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_mktsegment",

@@ -42,7 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..core import query
+from ..core import query, staged_build, staging_dir
 
 FOLDER_CONFIG = [
     # folder_name, lakehouse_folder, copy_to_archive, delete_original
@@ -302,37 +302,37 @@ def ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     table.  A wrong anti-join key (the round-1 advice finding: keying
     only (folder, name) misses modified files) now fails the gate.
 
-    Steady-state gate (the streaming drain discipline): the bronze
-    ingestion log is DURABLE incremental state — the reference's own
-    design never replays ingested history — and the three-run
-    lifecycle over the pinned fixture is deterministic, so a completed
-    lifecycle is stamped and reruns read the materialized log (still
-    value-checked against the literal oracle every run).  The
-    lifecycle semantics stay independently pinned by the run_ingest
-    tests in tests/test_operators.py, which always start cold, and
-    the ingest GROWTH claims by tools/scale_smoke.py's cold/no-op
-    file-count probe.  Bump the token when the fixture or run
-    timestamps change."""
+    Steady-state gate (``core.staged_build``, the gate every staged
+    artifact and drained stream uses): the bronze ingestion log is
+    DURABLE incremental state — the reference's own design never
+    replays ingested history — and the three-run lifecycle over the
+    pinned fixture is deterministic, so a completed lifecycle is
+    stamped and reruns read the materialized log (still value-checked
+    against the literal oracle every run).  The lifecycle semantics
+    stay independently pinned by the run_ingest tests in
+    tests/test_operators.py, which always start cold, and the ingest
+    GROWTH claims by tools/scale_smoke.py's cold/no-op file-count
+    probe.  Bump the token when the fixture or run timestamps
+    change."""
     import shutil
 
-    from ..streaming.streams import _drained_current, _stamp_drained
-
-    base = f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}/ingest"
+    base = staging_dir(sf_dir, "ingest")
     src, bronze = f"{base}/source", f"{base}/bronze"
     token = "ingest_lifecycle_v1"
-    if not _drained_current(base, token):
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
-        make_source_fixture(src)
-        run_ingest(spark, src, bronze)
-        run_ingest(spark, src, bronze)  # idempotent re-run: no-op
-        # modified-file re-ingest: new content, deterministic future mtime
-        changed = os.path.join(src, "finance", "report_q1.csv")
-        with open(changed, "ab") as f:
-            f.write(b"3,999\n")
-        os.utime(changed, (4102444800, 4102444800))  # 2100-01-01, > any real mtime
-        run_ingest(spark, src, bronze, run_ts="2024-06-02 09:00:00")
-        _stamp_drained(base, token)
+    with staged_build(spark, token, base) as need:
+        if need:
+            shutil.rmtree(base, ignore_errors=True)
+            os.makedirs(base, exist_ok=True)
+            make_source_fixture(src)
+            run_ingest(spark, src, bronze)
+            run_ingest(spark, src, bronze)  # idempotent re-run: no-op
+            # modified-file re-ingest: new content, deterministic future mtime
+            changed = os.path.join(src, "finance", "report_q1.csv")
+            with open(changed, "ab") as f:
+                f.write(b"3,999\n")
+            os.utime(changed, (4102444800, 4102444800))  # 2100-01-01, > any real mtime
+            run_ingest(spark, src, bronze, run_ts="2024-06-02 09:00:00")
+            open(f"{base}/_SUCCESS", "w").close()
     log = read_log(spark, os.path.join(bronze, "_ingestion_log"))
     return log.select(
         "folder_name",

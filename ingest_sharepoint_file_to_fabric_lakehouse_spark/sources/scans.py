@@ -27,7 +27,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..core import query, t
+from ..core import query, staged_build, staging_dir, t
 
 
 def _staging(sf_dir: str) -> str:
@@ -693,40 +693,46 @@ def stream_datasource_sharepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             return _ChangesReader(self.options)
 
     spark.dataSource.register(SharePointChangesSource)
-    base = f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}/stream_ds_sharepoint"
+    base = staging_dir(sf_dir, "stream_ds_sharepoint")
     out, ckpt = f"{base}/out", f"{base}/ckpt"
-    # Steady-state resume gate (streaming/streams._drained_current):
-    # the change feed is a deterministic literal log, so a completed
-    # drain is final — a production connector keeps its cursor in the
-    # checkpoint and never re-pages history; the token names the feed
-    # version so editing `arrivals` forces a re-drain.
-    from ..streaming.streams import _drained_current, _stamp_drained
-
+    # Steady-state resume gate (core.staged_build, as for every drained
+    # stream): the change feed is a deterministic literal log, so a
+    # completed drain is final — a production connector keeps its
+    # cursor in the checkpoint and never re-pages history; the token
+    # names the feed version so editing `arrivals` forces a re-drain.
     token = f"arrivals_v1_n{len(arrivals)}"
-    if not _drained_current(out, token):
-        shutil.rmtree(base, ignore_errors=True)
-        seen = {"n": 0}
+    with staged_build(spark, token, out) as need:
+        if need:
+            # only out and ckpt: base also holds this gate's lease file
+            shutil.rmtree(out, ignore_errors=True)
+            shutil.rmtree(ckpt, ignore_errors=True)
+            seen = {"n": 0}
 
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            n = batch_df.count()
-            batch_df.write.mode("overwrite").parquet(f"{out}/epoch={epoch_id}")
-            seen["n"] += n
+            def sink(batch_df: DataFrame, epoch_id: int) -> None:
+                n = batch_df.count()
+                batch_df.write.mode("overwrite").parquet(f"{out}/epoch={epoch_id}")
+                seen["n"] += n
 
-        q = (
-            spark.readStream.format("sharepoint_changes")
-            .option("batch_files", "3")
-            .load()
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        # drain-until-exhausted: the feed is finite, so the terminal
-        # state is deterministic; the poll is control-plane only
-        deadline = time.time() + 120
-        while seen["n"] < len(arrivals) and time.time() < deadline:
-            time.sleep(0.1)
-        q.stop()
-        q.awaitTermination(60)
-        _stamp_drained(out, token)
+            q = (
+                spark.readStream.format("sharepoint_changes")
+                .option("batch_files", "3")
+                .load()
+                .writeStream.foreachBatch(sink)
+                .option("checkpointLocation", ckpt)
+                .trigger(processingTime="0 seconds")
+                .start()
+            )
+            # drain-until-exhausted: the feed is finite, so the terminal
+            # state is deterministic; the poll is control-plane only
+            deadline = time.time() + 120
+            while seen["n"] < len(arrivals) and time.time() < deadline:
+                time.sleep(0.1)
+            q.stop()
+            q.awaitTermination(60)
+            if seen["n"] < len(arrivals):
+                raise TimeoutError(
+                    f"SharePoint change feed drained {seen['n']} of "
+                    f"{len(arrivals)} arrivals before the deadline"
+                )
+            open(f"{out}/_SUCCESS", "w").close()
     return spark.read.parquet(f"{out}/epoch=*").orderBy("seq")

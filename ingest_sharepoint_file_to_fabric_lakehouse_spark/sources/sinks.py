@@ -14,8 +14,6 @@ tiny staging fixtures; file counts follow the shuffle partitioning.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -26,6 +24,7 @@ from ..core import (
     source_fingerprint,
     staged_build,
     staging_current,
+    staging_dir,
     stamp_staging,
     t,
 )
@@ -36,10 +35,6 @@ from ..plans.merge import (
     read_table,
     write_table,
 )
-
-
-def _staging(sf_dir: str) -> str:
-    return f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}"
 
 
 @query(
@@ -55,7 +50,7 @@ def _staging(sf_dir: str) -> str:
 def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write a filtered slice to parquet, read it back, aggregate —
     oracle computes the same aggregate straight from the source."""
-    path = f"{_staging(sf_dir)}/sink_orders_f"
+    path = staging_dir(sf_dir, "sink_orders_f")
     src = t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     src.write.mode("overwrite").parquet(path)
     back = spark.read.parquet(path)
@@ -84,7 +79,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory.  (100-TB note: partition by a bounded-cardinality
     column; never by a key.)
     """
-    path = f"{_staging(sf_dir)}/sink_orders_by_year"
+    path = staging_dir(sf_dir, "sink_orders_by_year")
     src = t(spark, sf_dir, "orders").withColumn("order_year", F.year("o_orderdate"))
     src.write.mode("overwrite").partitionBy("order_year").parquet(path)
     back = spark.read.parquet(path)
@@ -126,7 +121,7 @@ def sink_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle reconstructs the merged state relationally from the source
     table — a strong, value-level check of the whole write path.
     """
-    path = f"{_staging(sf_dir)}/sink_merge_orders"
+    path = staging_dir(sf_dir, "sink_merge_orders")
     orders = t(spark, sf_dir, "orders")
     # The pre-merge seed is rebuilt only when the SOURCE data changed
     # (fingerprint-gated); on reuse the target already holds merged
@@ -196,7 +191,7 @@ def sink_merge_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition directories (dynamic partition overwrite), leaving every
     earlier year's files untouched (byte-identity asserted in
     tests/test_plans.py).  This is the 100 TB MERGE shape."""
-    path = f"{_staging(sf_dir)}/sink_merge_part"
+    path = staging_dir(sf_dir, "sink_merge_part")
     orders = t(spark, sf_dir, "orders").withColumn("order_year", F.year("o_orderdate"))
     # fingerprint-gated seed (see sink_delta_merge): the MERGE is
     # idempotent, so re-merging into the already-merged target is
@@ -240,7 +235,7 @@ def sink_csv_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     the source table, which is the oracle.  Scale note: a CSV export
     is one narrow map-side write per partition (no shuffle); the
     schema-on-read-back is explicit because CSV carries no types."""
-    path = f"{_staging(sf_dir)}/nation_csv_out"
+    path = staging_dir(sf_dir, "nation_csv_out")
     (
         t(spark, sf_dir, "nation")
         .select("n_nationkey", "n_name", "n_regionkey")
@@ -279,14 +274,14 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured query pays read → repartition(4) → write → read-back,
     the real steady-state cost of an OPTIMIZE pass.
     """
-    frag = f"{_staging(sf_dir)}/orders_fragmented"
+    frag = staging_dir(sf_dir, "orders_fragmented")
     token = source_fingerprint(sf_dir, "orders")
     with staged_build(spark, token, frag) as need:
         if need:
             t(spark, sf_dir, "orders").repartition(64).write.mode(
                 "overwrite"
             ).parquet(frag)
-    compacted = f"{_staging(sf_dir)}/orders_compacted"
+    compacted = staging_dir(sf_dir, "orders_compacted")
     spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(compacted)
     back = spark.read.parquet(compacted)
     return back.agg(

@@ -20,55 +20,30 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..core import dec, money, query, source_fingerprint, t
+from ..core import (
+    SCRATCH_ROOT,
+    dec,
+    money,
+    query,
+    source_fingerprint,
+    staged_build,
+    staging_dir,
+    t,
+)
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string"
 )
 
 
-# Streaming scratch (checkpoint logs, epoch outputs, staged batch
-# files) is many small fsync-heavy writes; on this host /tmp is
-# disk-backed while /dev/shm is tmpfs, and the whole streaming staging
-# footprint is a few MB — so the fixed per-micro-batch cost drops
-# substantially on the RAM disk.  Purely bench-host I/O placement: a
-# cluster deployment points checkpoints at durable storage instead
-# (this scratch is all reconstructible, nothing durable lives here).
-_SCRATCH_ROOT = "/dev/shm/sgdata" if os.path.isdir("/dev/shm") else "/tmp/sgdata"
-
-
-def _staging(sf_dir: str, name: str) -> str:
-    return f"{_SCRATCH_ROOT}/{os.path.basename(sf_dir.rstrip('/'))}/{name}"
-
-
-def _drained_current(out: str, token: str) -> bool:
-    """True iff a completed drain of ``out`` is stamped for exactly
-    this source fingerprint — the streaming analog of the staged-index
-    gate (``core.staging_current``).
-
-    A Structured Streaming deployment is CONTINUOUS: the query
-    attaches to its checkpoint and its materialized sink; it never
-    replays the whole feed per invocation.  Re-running a fully-drained
-    AvailableNow query over an UNCHANGED staged feed is pure
-    per-micro-batch fixed cost (offset log + state commit + planning,
-    measured 1.5-3.5 s per key at any fixture scale) for bit-identical
-    output — the steady state is "read the materialized epochs", which
-    is what the gated path does.  A regenerated fixture (different
-    fingerprint) or wiped scratch re-drains from zero, and the
-    restart/exactly-once SEMANTICS stay independently pinned by
-    tests/test_streaming_resume.py, which always drains fresh
-    checkpoints."""
-    try:
-        with open(os.path.join(out, "_SG_DRAINED")) as fh:
-            return fh.read().strip() == token
-    except OSError:
-        return False
-
-
-def _stamp_drained(out: str, token: str) -> None:
-    """Record the feed fingerprint a completed drain consumed."""
-    with open(os.path.join(out, "_SG_DRAINED"), "w") as fh:
-        fh.write(token)
+def _await_drain(q, out: str) -> None:
+    """Wait up to 300 s for an AvailableNow drain to finish.  A drain
+    still running at the deadline is stopped and raised: its epochs
+    are partial, and the raise keeps the enclosing ``staged_build``
+    from stamping them as the current answer."""
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError(f"stream drain into {out} still running after 300 s")
 
 
 def stage_event_files(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
@@ -96,9 +71,7 @@ def stage_event_files(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str
     isdir): a regenerated events fixture must rebuild the feed, or
     every streaming key would silently stream stale data — the same
     staleness class core.source_fingerprint guards everywhere else."""
-    from ..core import source_fingerprint, staged_build
-
-    src_dir = _staging(sf_dir, "stream_shared_input_v2")
+    src_dir = staging_dir(sf_dir, "stream_shared_input_v2", SCRATCH_ROOT)
     token = source_fingerprint(sf_dir, "events")
     with staged_build(spark, token, src_dir) as need:
         if need:
@@ -206,7 +179,7 @@ def run_stream_to_parquet(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _await_drain(q, out_path)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb)
@@ -227,34 +200,40 @@ def stream_tumbling_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling windows through a REAL readStream (complete mode,
     AvailableNow) — final state must equal the batch oracle exactly.
 
-    Steady-state resume (see :func:`_drained_current`): an unchanged
-    staged feed means the drained epochs already hold the answer — the
-    continuous deployment's behavior — so the gate skips straight to
-    the materialized read."""
-    base = _staging(sf_dir, "stream_tumbling")
+    Steady-state resume: the drained epochs are staged state behind
+    ``core.staged_build``'s fingerprint gate, like every index.  A
+    continuous deployment never replays its whole feed per invocation,
+    and re-draining an UNCHANGED feed is pure micro-batch fixed cost
+    (1.5-3.5 s per key) for identical output, so an unchanged feed
+    reads the materialized epochs; a new fingerprint or wiped scratch
+    re-drains from zero.  Restart semantics stay pinned by
+    tests/test_streaming_resume.py, which always drains fresh
+    checkpoints."""
+    base = staging_dir(sf_dir, "stream_tumbling", SCRATCH_ROOT)
     src = stage_event_files(spark, sf_dir)
     out, ckpt = f"{base}/out", f"{base}/ckpt"
     token = source_fingerprint(sf_dir, "events")
-    if not _drained_current(out, token):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-            .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-            .agg(F.count("*").alias("n_events"), money(F.sum(dec("value"))).alias("total_value"))
-            .select(
-                F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-                "event_type",
-                "n_events",
-                "total_value",
+    with staged_build(spark, token, out) as need:
+        if need:
+            shutil.rmtree(out, ignore_errors=True)
+            shutil.rmtree(ckpt, ignore_errors=True)
+            stream = (
+                spark.readStream.schema(EVENTS_SCHEMA)
+                .option("maxFilesPerTrigger", 2)
+                .parquet(src)
+                .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
+                .agg(F.count("*").alias("n_events"), money(F.sum(dec("value"))).alias("total_value"))
+                .select(
+                    F.col("w.start").cast("timestamp_ntz").alias("window_start"),
+                    "event_type",
+                    "n_events",
+                    "total_value",
+                )
             )
-        )
-        run_stream_to_parquet(
-            stream, out, ckpt, mode="complete", src_dir=src, final_nodata_batch=False
-        )
-        _stamp_drained(out, token)
+            run_stream_to_parquet(
+                stream, out, ckpt, mode="complete", src_dir=src, final_nodata_batch=False
+            )
+            open(f"{out}/_SUCCESS", "w").close()
     epochs = sorted(int(d.split("=")[1]) for d in os.listdir(out) if d.startswith("epoch="))
     return spark.read.parquet(f"{out}/epoch={epochs[-1]}")
 
@@ -271,42 +250,44 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     TWICE (staged files read twice via union of two file streams ⇒
     duplicates across micro-batches); watermarked dropDuplicates must
     reduce to exactly the distinct set."""
-    base = _staging(sf_dir, "stream_dedup")
+    base = staging_dir(sf_dir, "stream_dedup", SCRATCH_ROOT)
     src = stage_event_files(spark, sf_dir)
     token = source_fingerprint(sf_dir, "events")
     dup_src = f"{base}/input_dup"
-    if not _drained_current(dup_src, token):
-        shutil.rmtree(dup_src, ignore_errors=True)
-        os.makedirs(dup_src, exist_ok=True)
-        # each file rides with its duplicate in the SAME micro-batch
-        # (maxFilesPerTrigger=4 takes whole (file, dup) pairs off the
-        # strictly-increasing-mtime order — two pairs per batch):
-        # the watermark can never advance past a pending duplicate, so
-        # dedup semantics don't depend on filesystem mtime accidents.
-        for b, f in enumerate(sorted(fn for fn in os.listdir(src) if not fn.startswith("_"))):
-            for j, name in enumerate((f, f"dup_{f}")):
-                shutil.copy(f"{src}/{f}", f"{dup_src}/{name}")
-                stamp = 1_000_000_000 + 2 * b + j
-                os.utime(f"{dup_src}/{name}", (stamp, stamp))
-        _stamp_drained(dup_src, token)
+    with staged_build(spark, token, dup_src) as need:
+        if need:
+            shutil.rmtree(dup_src, ignore_errors=True)
+            os.makedirs(dup_src, exist_ok=True)
+            # each file rides with its duplicate in the SAME micro-batch
+            # (maxFilesPerTrigger=4 takes whole (file, dup) pairs off the
+            # strictly-increasing-mtime order — two pairs per batch):
+            # the watermark can never advance past a pending duplicate, so
+            # dedup semantics don't depend on filesystem mtime accidents.
+            for b, f in enumerate(sorted(fn for fn in os.listdir(src) if not fn.startswith("_"))):
+                for j, name in enumerate((f, f"dup_{f}")):
+                    shutil.copy(f"{src}/{f}", f"{dup_src}/{name}")
+                    stamp = 1_000_000_000 + 2 * b + j
+                    os.utime(f"{dup_src}/{name}", (stamp, stamp))
+            open(f"{dup_src}/_SUCCESS", "w").close()
     out, ckpt = f"{base}/out", f"{base}/ckpt"
-    if not _drained_current(out, token):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 4)
-            .parquet(dup_src)
-            # watermark requires TIMESTAMP (ltz); session tz is UTC so the cast is lossless
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", "1 hour")
-            .dropDuplicates(["event_id"])
-            .select("event_id")
-        )
-        run_stream_to_parquet(
-            stream, out, ckpt, mode="append", src_dir=src, final_nodata_batch=False
-        )
-        _stamp_drained(out, token)
+    with staged_build(spark, token, out) as need:
+        if need:
+            shutil.rmtree(out, ignore_errors=True)
+            shutil.rmtree(ckpt, ignore_errors=True)
+            stream = (
+                spark.readStream.schema(EVENTS_SCHEMA)
+                .option("maxFilesPerTrigger", 4)
+                .parquet(dup_src)
+                # watermark requires TIMESTAMP (ltz); session tz is UTC so the cast is lossless
+                .withColumn("ts", F.col("ts").cast("timestamp"))
+                .withWatermark("ts", "1 hour")
+                .dropDuplicates(["event_id"])
+                .select("event_id")
+            )
+            run_stream_to_parquet(
+                stream, out, ckpt, mode="append", src_dir=src, final_nodata_batch=False
+            )
+            open(f"{out}/_SUCCESS", "w").close()
     deduped = spark.read.parquet(f"{out}/epoch=*")
     return deduped.agg(
         F.count("*").alias("n_unique"), F.sum("event_id").alias("id_checksum")
@@ -341,42 +322,43 @@ def stream_stateful_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    base = _staging(sf_dir, "stream_stateful")
+    base = staging_dir(sf_dir, "stream_stateful", SCRATCH_ROOT)
     src = stage_event_files(spark, sf_dir)
     out, ckpt = f"{base}/out", f"{base}/ckpt"
     token = source_fingerprint(sf_dir, "events")
-    if not _drained_current(out, token):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with staged_build(spark, token, out) as need:
+        if need:
+            shutil.rmtree(out, ignore_errors=True)
+            shutil.rmtree(ckpt, ignore_errors=True)
 
-        def update(key, pdfs, state: GroupState):
-            n, chk = state.get if state.exists else (0, 0)
-            for pdf in pdfs:
-                n += len(pdf)
-                chk += int(pdf.event_id.sum())
-            state.update((n, chk))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "id_checksum": [chk]}
-            )
+            def update(key, pdfs, state: GroupState):
+                n, chk = state.get if state.exists else (0, 0)
+                for pdf in pdfs:
+                    n += len(pdf)
+                    chk += int(pdf.event_id.sum())
+                state.update((n, chk))
+                yield pd.DataFrame(
+                    {"user_id": [key[0]], "n_events": [n], "id_checksum": [chk]}
+                )
 
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-            .filter(F.col("user_id") < 40)
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                update,
-                outputStructType="user_id long, n_events long, id_checksum long",
-                stateStructType="n long, chk long",
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
+            stream = (
+                spark.readStream.schema(EVENTS_SCHEMA)
+                .option("maxFilesPerTrigger", 2)
+                .parquet(src)
+                .filter(F.col("user_id") < 40)
+                .groupBy("user_id")
+                .applyInPandasWithState(
+                    update,
+                    outputStructType="user_id long, n_events long, id_checksum long",
+                    stateStructType="n long, chk long",
+                    outputMode="update",
+                    timeoutConf=GroupStateTimeout.NoTimeout,
+                )
             )
-        )
-        run_stream_to_parquet(
-            stream, out, ckpt, mode="update", src_dir=src, final_nodata_batch=False
-        )
-        _stamp_drained(out, token)
+            run_stream_to_parquet(
+                stream, out, ckpt, mode="update", src_dir=src, final_nodata_batch=False
+            )
+            open(f"{out}/_SUCCESS", "w").close()
     emitted = spark.read.parquet(f"{out}/epoch=*")
     # running totals are monotone: the max per user == final state
     return emitted.groupBy("user_id").agg(
@@ -412,29 +394,30 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts.  (With arbitrary mtime ordering this query silently lost
     ~half its input to late-drops — the determinism fix is what makes
     the strong oracle possible.)"""
-    base = _staging(sf_dir, "stream_late")
+    base = staging_dir(sf_dir, "stream_late", SCRATCH_ROOT)
     src = stage_event_files(spark, sf_dir)
     out, ckpt = f"{base}/out", f"{base}/ckpt"
     token = source_fingerprint(sf_dir, "events")
-    if not _drained_current(out, token):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-            .agg(F.count("*").alias("n_events"))
-            .select(
-                F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-                "event_type",
-                "n_events",
+    with staged_build(spark, token, out) as need:
+        if need:
+            shutil.rmtree(out, ignore_errors=True)
+            shutil.rmtree(ckpt, ignore_errors=True)
+            stream = (
+                spark.readStream.schema(EVENTS_SCHEMA)
+                .option("maxFilesPerTrigger", 2)
+                .parquet(src)
+                .withColumn("ts", F.col("ts").cast("timestamp"))
+                .withWatermark("ts", "10 minutes")
+                .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
+                .agg(F.count("*").alias("n_events"))
+                .select(
+                    F.col("w.start").cast("timestamp_ntz").alias("window_start"),
+                    "event_type",
+                    "n_events",
+                )
             )
-        )
-        run_stream_to_parquet(stream, out, ckpt, mode="append", src_dir=src)
-        _stamp_drained(out, token)
+            run_stream_to_parquet(stream, out, ckpt, mode="append", src_dir=src)
+            open(f"{out}/_SUCCESS", "w").close()
     emitted = spark.read.parquet(f"{out}/epoch=*")
     return emitted.groupBy("event_type").agg(
         F.count("*").alias("n_closed_windows"), F.sum("n_events").alias("n_events_emitted")
@@ -463,50 +446,51 @@ def stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_additive_state_merge), and the commit-log row count must
     equal the on-disk row count must equal the source row count — the
     exactly-once invariant."""
-    base = _staging(sf_dir, "stream_sink")
+    base = staging_dir(sf_dir, "stream_sink", SCRATCH_ROOT)
     src = stage_event_files(spark, sf_dir)
     out, ckpt, commits = f"{base}/out", f"{base}/ckpt", f"{base}/commits"
     token = source_fingerprint(sf_dir, "events")
-    if not _drained_current(out, token):
-        for d in (out, ckpt, commits):
-            shutil.rmtree(d, ignore_errors=True)
+    with staged_build(spark, token, out) as need:
+        if need:
+            for d in (out, ckpt, commits):
+                shutil.rmtree(d, ignore_errors=True)
 
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            import json
+            def sink(batch_df: DataFrame, epoch_id: int) -> None:
+                import json
 
-            batch_df.write.mode("overwrite").parquet(f"{out}/epoch={epoch_id}")
-            # Count from the COMMITTED files (parquet footer metadata —
-            # no data scan): the marker then describes what was durably
-            # written, and the batch plan executes once per epoch
-            # instead of twice (a pre-write batch_df.count() re-ran the
-            # whole incremental plan just to learn the row count).
-            counted = spark.read.parquet(f"{out}/epoch={epoch_id}").count()
-            # Post-commit action: marker written only after the data
-            # commit.  The marker is CONTROL-PLANE — one row per epoch
-            # — so it's a driver-side atomic file create (write temp +
-            # rename), exactly how Spark's own commit protocols write
-            # _SUCCESS / the streaming commit log; a per-epoch Spark
-            # parquet job for one row paid ~0.3 s of scheduler latency
-            # per epoch for no distribution benefit.  Read back via
-            # spark.read.json below.
-            os.makedirs(commits, exist_ok=True)
-            tmp, final = f"{commits}/.epoch_{epoch_id}.tmp", f"{commits}/epoch_{epoch_id}.json"
-            with open(tmp, "w") as fh:
-                fh.write(json.dumps({"epoch": epoch_id, "n_rows": counted}) + "\n")
-            os.replace(tmp, final)
+                batch_df.write.mode("overwrite").parquet(f"{out}/epoch={epoch_id}")
+                # Count from the COMMITTED files (parquet footer metadata —
+                # no data scan): the marker then describes what was durably
+                # written, and the batch plan executes once per epoch
+                # instead of twice (a pre-write batch_df.count() re-ran the
+                # whole incremental plan just to learn the row count).
+                counted = spark.read.parquet(f"{out}/epoch={epoch_id}").count()
+                # Post-commit action: marker written only after the data
+                # commit.  The marker is CONTROL-PLANE — one row per epoch
+                # — so it's a driver-side atomic file create (write temp +
+                # rename), exactly how Spark's own commit protocols write
+                # _SUCCESS / the streaming commit log; a per-epoch Spark
+                # parquet job for one row paid ~0.3 s of scheduler latency
+                # per epoch for no distribution benefit.  Read back via
+                # spark.read.json below.
+                os.makedirs(commits, exist_ok=True)
+                tmp, final = f"{commits}/.epoch_{epoch_id}.tmp", f"{commits}/epoch_{epoch_id}.json"
+                with open(tmp, "w") as fh:
+                    fh.write(json.dumps({"epoch": epoch_id, "n_rows": counted}) + "\n")
+                os.replace(tmp, final)
 
-        q = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-            .select("event_id", "ts", "event_type", "value")
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        _stamp_drained(out, token)
+            q = (
+                spark.readStream.schema(EVENTS_SCHEMA)
+                .option("maxFilesPerTrigger", 2)
+                .parquet(src)
+                .select("event_id", "ts", "event_type", "value")
+                .writeStream.foreachBatch(sink)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            _await_drain(q, out)
+            open(f"{out}/_SUCCESS", "w").close()
     log = spark.read.schema("epoch long, n_rows long").json(f"{commits}/epoch_*.json")
     data = spark.read.parquet(f"{out}/epoch=*")
     return (
@@ -539,26 +523,27 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     changing dim picks up updates); integer checksums make the check
     order-insensitive.
     """
-    base = _staging(sf_dir, "stream_static_join")
+    base = staging_dir(sf_dir, "stream_static_join", SCRATCH_ROOT)
     src = stage_event_files(spark, sf_dir)
     out, ckpt = f"{base}/out", f"{base}/ckpt"
     # the static dim participates in the output, so the drain gate
     # fingerprints BOTH sources — a regenerated customer table must
     # re-enrich even if events are unchanged
     token = source_fingerprint(sf_dir, "events", "customer")
-    if not _drained_current(out, token):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        cust = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-            .join(F.broadcast(cust), F.col("user_id") == F.col("c_custkey"))
-            .select("event_id", "event_type", "c_mktsegment")
-        )
-        run_stream_to_parquet(stream, out, ckpt, mode="append", src_dir=src)
-        _stamp_drained(out, token)
+    with staged_build(spark, token, out) as need:
+        if need:
+            shutil.rmtree(out, ignore_errors=True)
+            shutil.rmtree(ckpt, ignore_errors=True)
+            cust = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+            stream = (
+                spark.readStream.schema(EVENTS_SCHEMA)
+                .option("maxFilesPerTrigger", 2)
+                .parquet(src)
+                .join(F.broadcast(cust), F.col("user_id") == F.col("c_custkey"))
+                .select("event_id", "event_type", "c_mktsegment")
+            )
+            run_stream_to_parquet(stream, out, ckpt, mode="append", src_dir=src)
+            open(f"{out}/_SUCCESS", "w").close()
     enriched = spark.read.parquet(f"{out}/epoch=*")
     return enriched.groupBy("event_type", "c_mktsegment").agg(
         F.count("*").alias("n_events"), F.sum("event_id").alias("id_checksum")
@@ -607,30 +592,31 @@ def stream_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle rebuilds the islands with a lag/cumsum window and applies
     the same rule.
     """
-    base = _staging(sf_dir, "stream_session_live")
+    base = staging_dir(sf_dir, "stream_session_live", SCRATCH_ROOT)
     src = stage_event_files(spark, sf_dir)
     out, ckpt = f"{base}/out", f"{base}/ckpt"
     token = source_fingerprint(sf_dir, "events")
-    if not _drained_current(out, token):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-            .filter(F.col("user_id") < 40)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", "30 minutes")
-            .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-            .agg(F.count("*").alias("n_events"))
-            .select(
-                "user_id",
-                F.col("w.start").cast("timestamp_ntz").alias("session_start"),
-                "n_events",
+    with staged_build(spark, token, out) as need:
+        if need:
+            shutil.rmtree(out, ignore_errors=True)
+            shutil.rmtree(ckpt, ignore_errors=True)
+            stream = (
+                spark.readStream.schema(EVENTS_SCHEMA)
+                .option("maxFilesPerTrigger", 2)
+                .parquet(src)
+                .filter(F.col("user_id") < 40)
+                .withColumn("ts", F.col("ts").cast("timestamp"))
+                .withWatermark("ts", "30 minutes")
+                .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+                .agg(F.count("*").alias("n_events"))
+                .select(
+                    "user_id",
+                    F.col("w.start").cast("timestamp_ntz").alias("session_start"),
+                    "n_events",
+                )
             )
-        )
-        run_stream_to_parquet(stream, out, ckpt, mode="append", src_dir=src)
-        _stamp_drained(out, token)
+            run_stream_to_parquet(stream, out, ckpt, mode="append", src_dir=src)
+            open(f"{out}/_SUCCESS", "w").close()
     return spark.read.parquet(f"{out}/epoch=*")
 
 
@@ -665,41 +651,42 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: state is bounded by (watermark delay + join range) x
     arrival rate per key; both sides shuffle on user_id once.
     """
-    base = _staging(sf_dir, "stream_stream_join")
+    base = staging_dir(sf_dir, "stream_stream_join", SCRATCH_ROOT)
     src = stage_event_files(spark, sf_dir)
     out, ckpt = f"{base}/out", f"{base}/ckpt"
     token = source_fingerprint(sf_dir, "events")
-    if not _drained_current(out, token):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with staged_build(spark, token, out) as need:
+        if need:
+            shutil.rmtree(out, ignore_errors=True)
+            shutil.rmtree(ckpt, ignore_errors=True)
 
-        def side(evt_type: str, alias: str):
-            return (
-                spark.readStream.schema(EVENTS_SCHEMA)
-                .option("maxFilesPerTrigger", 2)
-                .parquet(src)
-                .filter(F.col("event_type") == evt_type)
-                .withColumn("ts", F.col("ts").cast("timestamp"))
-                .withWatermark("ts", "10 minutes")
-                .select(
-                    F.col("event_id").alias(f"{alias}_id"),
-                    F.col("ts").alias(f"{alias}_ts"),
-                    F.col("user_id").alias(f"{alias}_user"),
-                    F.col("event_type").alias(f"{alias}_type"),
+            def side(evt_type: str, alias: str):
+                return (
+                    spark.readStream.schema(EVENTS_SCHEMA)
+                    .option("maxFilesPerTrigger", 2)
+                    .parquet(src)
+                    .filter(F.col("event_type") == evt_type)
+                    .withColumn("ts", F.col("ts").cast("timestamp"))
+                    .withWatermark("ts", "10 minutes")
+                    .select(
+                        F.col("event_id").alias(f"{alias}_id"),
+                        F.col("ts").alias(f"{alias}_ts"),
+                        F.col("user_id").alias(f"{alias}_user"),
+                        F.col("event_type").alias(f"{alias}_type"),
+                    )
                 )
-            )
 
-        v, p = side("view", "v"), side("purchase", "p")
-        joined = v.join(
-            p,
-            (F.col("v_user") == F.col("p_user"))
-            & (F.col("p_ts") >= F.col("v_ts"))
-            & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 10 MINUTES")),
-        ).select("v_id", "p_id", "v_type", "p_type")
-        run_stream_to_parquet(
-            joined, out, ckpt, mode="append", src_dir=src, final_nodata_batch=False
-        )
-        _stamp_drained(out, token)
+            v, p = side("view", "v"), side("purchase", "p")
+            joined = v.join(
+                p,
+                (F.col("v_user") == F.col("p_user"))
+                & (F.col("p_ts") >= F.col("v_ts"))
+                & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 10 MINUTES")),
+            ).select("v_id", "p_id", "v_type", "p_type")
+            run_stream_to_parquet(
+                joined, out, ckpt, mode="append", src_dir=src, final_nodata_batch=False
+            )
+            open(f"{out}/_SUCCESS", "w").close()
     pairs = spark.read.parquet(f"{out}/epoch=*")
     return pairs.groupBy(
         F.col("v_type").alias("view_type"), F.col("p_type").alias("purchase_type")
@@ -773,40 +760,41 @@ def stream_additive_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     input — the oracle.  State volume is |groups| rows regardless of
     stream length; the merge reads and rewrites only the state table.
     """
-    base = _staging(sf_dir, "stream_additive")
+    base = staging_dir(sf_dir, "stream_additive", SCRATCH_ROOT)
     src = stage_event_files(spark, sf_dir)
     state, ckpt, commits = f"{base}/state", f"{base}/ckpt", f"{base}/commits"
     token = source_fingerprint(sf_dir, "events")
-    if not _drained_current(base, token):
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(commits, exist_ok=True)
+    with staged_build(spark, token, base) as need:
+        if need:
+            shutil.rmtree(base, ignore_errors=True)
+            os.makedirs(commits, exist_ok=True)
 
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            partial = batch_df.groupBy("event_type").agg(
-                F.count("*").alias("n_events"), F.sum("event_id").alias("id_checksum")
+            def sink(batch_df: DataFrame, epoch_id: int) -> None:
+                partial = batch_df.groupBy("event_type").agg(
+                    F.count("*").alias("n_events"), F.sum("event_id").alias("id_checksum")
+                )
+                additive_state_merge(partial, state, commits, epoch_id)
+
+            # 2 files per trigger ⇒ 2 merge epochs: enough to exercise the
+            # cross-epoch additive fence (one merge into empty state, one
+            # into existing state, plus the replay no-op path covered in
+            # tests), and the final state is epoch-count independent — the
+            # oracle is the batch GROUP BY either way.  Each epoch costs
+            # ~0.5 s of micro-batch planning plus the state
+            # read-merge-swap jobs, so epochs beyond the semantics are
+            # pure fixed cost.
+            q = (
+                spark.readStream.schema(EVENTS_SCHEMA)
+                .option("maxFilesPerTrigger", 2)
+                .parquet(src)
+                .select("event_id", "event_type")
+                .writeStream.foreachBatch(sink)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
             )
-            additive_state_merge(partial, state, commits, epoch_id)
-
-        # 2 files per trigger ⇒ 2 merge epochs: enough to exercise the
-        # cross-epoch additive fence (one merge into empty state, one
-        # into existing state, plus the replay no-op path covered in
-        # tests), and the final state is epoch-count independent — the
-        # oracle is the batch GROUP BY either way.  Each epoch costs
-        # ~0.5 s of micro-batch planning plus the state
-        # read-merge-swap jobs, so epochs beyond the semantics are
-        # pure fixed cost.
-        q = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-            .select("event_id", "event_type")
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        _stamp_drained(base, token)
+            _await_drain(q, base)
+            open(f"{base}/_SUCCESS", "w").close()
     # the continuously-maintained aggregate table IS the query result —
     # reading it back is the steady state by construction
     return spark.read.parquet(state).orderBy("event_type")
@@ -864,39 +852,40 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     once on user_id, state bounded by (delay + range) x per-key rate;
     the outer emission adds no state, only eviction-time output.
     """
-    base = _staging(sf_dir, "stream_stream_outer")
+    base = staging_dir(sf_dir, "stream_stream_outer", SCRATCH_ROOT)
     src = stage_event_files(spark, sf_dir)
     out, ckpt = f"{base}/out", f"{base}/ckpt"
     token = source_fingerprint(sf_dir, "events")
-    if not _drained_current(out, token):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with staged_build(spark, token, out) as need:
+        if need:
+            shutil.rmtree(out, ignore_errors=True)
+            shutil.rmtree(ckpt, ignore_errors=True)
 
-        def side(evt_type: str, alias: str):
-            return (
-                spark.readStream.schema(EVENTS_SCHEMA)
-                .option("maxFilesPerTrigger", 2)
-                .parquet(src)
-                .filter(F.col("event_type") == evt_type)
-                .withColumn("ts", F.col("ts").cast("timestamp"))
-                .withWatermark("ts", "10 minutes")
-                .select(
-                    F.col("event_id").alias(f"{alias}_id"),
-                    F.col("ts").alias(f"{alias}_ts"),
-                    F.col("user_id").alias(f"{alias}_user"),
+            def side(evt_type: str, alias: str):
+                return (
+                    spark.readStream.schema(EVENTS_SCHEMA)
+                    .option("maxFilesPerTrigger", 2)
+                    .parquet(src)
+                    .filter(F.col("event_type") == evt_type)
+                    .withColumn("ts", F.col("ts").cast("timestamp"))
+                    .withWatermark("ts", "10 minutes")
+                    .select(
+                        F.col("event_id").alias(f"{alias}_id"),
+                        F.col("ts").alias(f"{alias}_ts"),
+                        F.col("user_id").alias(f"{alias}_user"),
+                    )
                 )
-            )
 
-        v, p = side("view", "v"), side("purchase", "p")
-        joined = v.join(
-            p,
-            (F.col("v_user") == F.col("p_user"))
-            & (F.col("p_ts") >= F.col("v_ts"))
-            & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 10 MINUTES")),
-            "leftOuter",
-        ).select("v_id", "v_ts", "p_id")
-        run_stream_to_parquet(joined, out, ckpt, mode="append", src_dir=src)
-        _stamp_drained(out, token)
+            v, p = side("view", "v"), side("purchase", "p")
+            joined = v.join(
+                p,
+                (F.col("v_user") == F.col("p_user"))
+                & (F.col("p_ts") >= F.col("v_ts"))
+                & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 10 MINUTES")),
+                "leftOuter",
+            ).select("v_id", "v_ts", "p_id")
+            run_stream_to_parquet(joined, out, ckpt, mode="append", src_dir=src)
+            open(f"{out}/_SUCCESS", "w").close()
     drained = spark.read.parquet(f"{out}/epoch=*")
     cutoff = t(spark, sf_dir, "events").agg(
         (F.max("ts") - F.expr("INTERVAL 1 DAY")).alias("cutoff")
@@ -955,42 +944,43 @@ def stream_watermark_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complements `tests/test_streaming_resume.py`, which pins the
     state-store mechanics epoch by epoch.
     """
-    base = _staging(sf_dir, "stream_late_resume")
+    base = staging_dir(sf_dir, "stream_late_resume", SCRATCH_ROOT)
     feed = stage_event_files(spark, sf_dir)
     files = sorted(f for f in os.listdir(feed) if f.endswith(".parquet"))
     src, out, ckpt = f"{base}/src", f"{base}/out", f"{base}/ckpt"
     token = source_fingerprint(sf_dir, "events")
-    if not _drained_current(out, token):
-        for p in (src, out, ckpt):
-            shutil.rmtree(p, ignore_errors=True)
-        os.makedirs(src, exist_ok=True)
+    with staged_build(spark, token, out) as need:
+        if need:
+            for p in (src, out, ckpt):
+                shutil.rmtree(p, ignore_errors=True)
+            os.makedirs(src, exist_ok=True)
 
-        def lifetime() -> None:
-            stream = (
-                spark.readStream.schema(EVENTS_SCHEMA)
-                .option("maxFilesPerTrigger", 2)
-                .parquet(src)
-                .withColumn("ts", F.col("ts").cast("timestamp"))
-                .withWatermark("ts", "10 minutes")
-                .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-                .agg(F.count("*").alias("n_events"))
-                .select(
-                    F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-                    "event_type",
-                    "n_events",
+            def lifetime() -> None:
+                stream = (
+                    spark.readStream.schema(EVENTS_SCHEMA)
+                    .option("maxFilesPerTrigger", 2)
+                    .parquet(src)
+                    .withColumn("ts", F.col("ts").cast("timestamp"))
+                    .withWatermark("ts", "10 minutes")
+                    .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
+                    .agg(F.count("*").alias("n_events"))
+                    .select(
+                        F.col("w.start").cast("timestamp_ntz").alias("window_start"),
+                        "event_type",
+                        "n_events",
+                    )
                 )
-            )
-            run_stream_to_parquet(stream, out, ckpt, mode="append", src_dir=feed)
+                run_stream_to_parquet(stream, out, ckpt, mode="append", src_dir=feed)
 
-        # copy2 preserves the feed's pinned strictly-increasing mtimes,
-        # so arrival order stays event-time order across both lifetimes
-        for f in files[: len(files) // 2]:
-            shutil.copy2(f"{feed}/{f}", f"{src}/{f}")
-        lifetime()
-        for f in files[len(files) // 2 :]:
-            shutil.copy2(f"{feed}/{f}", f"{src}/{f}")
-        lifetime()
-        _stamp_drained(out, token)
+            # copy2 preserves the feed's pinned strictly-increasing mtimes,
+            # so arrival order stays event-time order across both lifetimes
+            for f in files[: len(files) // 2]:
+                shutil.copy2(f"{feed}/{f}", f"{src}/{f}")
+            lifetime()
+            for f in files[len(files) // 2 :]:
+                shutil.copy2(f"{feed}/{f}", f"{src}/{f}")
+            lifetime()
+            open(f"{out}/_SUCCESS", "w").close()
     emitted = spark.read.parquet(f"{out}/epoch=*")
     return emitted.groupBy("event_type").agg(
         F.count("*").alias("n_closed_windows"),
@@ -1022,50 +1012,51 @@ def stream_dedup_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is evicted — eviction-under-watermark is the single-
     lifetime key's concern, not this one's.
     """
-    base = _staging(sf_dir, "stream_dedup_resume")
+    base = staging_dir(sf_dir, "stream_dedup_resume", SCRATCH_ROOT)
     feed = stage_event_files(spark, sf_dir)
     files = sorted(f for f in os.listdir(feed) if f.endswith(".parquet"))
     src, out, ckpt = f"{base}/src", f"{base}/out", f"{base}/ckpt"
     token = source_fingerprint(sf_dir, "events")
-    if not _drained_current(out, token):
-        for p in (src, out, ckpt):
-            shutil.rmtree(p, ignore_errors=True)
-        os.makedirs(src, exist_ok=True)
-        stamp = [1_000_000_000]
+    with staged_build(spark, token, out) as need:
+        if need:
+            for p in (src, out, ckpt):
+                shutil.rmtree(p, ignore_errors=True)
+            os.makedirs(src, exist_ok=True)
+            stamp = [1_000_000_000]
 
-        def land(name: str, from_file: str) -> None:
-            shutil.copy(f"{feed}/{from_file}", f"{src}/{name}")
-            os.utime(f"{src}/{name}", (stamp[0], stamp[0]))
-            stamp[0] += 1
+            def land(name: str, from_file: str) -> None:
+                shutil.copy(f"{feed}/{from_file}", f"{src}/{name}")
+                os.utime(f"{src}/{name}", (stamp[0], stamp[0]))
+                stamp[0] += 1
 
-        def lifetime() -> None:
-            stream = (
-                spark.readStream.schema(EVENTS_SCHEMA)
-                .option("maxFilesPerTrigger", 4)
-                .parquet(src)
-                .withColumn("ts", F.col("ts").cast("timestamp"))
-                .withWatermark("ts", "3650 days")
-                .dropDuplicates(["event_id"])
-                .select("event_id")
-            )
-            run_stream_to_parquet(
-                stream, out, ckpt, mode="append", src_dir=feed,
-                final_nodata_batch=False,
-            )
+            def lifetime() -> None:
+                stream = (
+                    spark.readStream.schema(EVENTS_SCHEMA)
+                    .option("maxFilesPerTrigger", 4)
+                    .parquet(src)
+                    .withColumn("ts", F.col("ts").cast("timestamp"))
+                    .withWatermark("ts", "3650 days")
+                    .dropDuplicates(["event_id"])
+                    .select("event_id")
+                )
+                run_stream_to_parquet(
+                    stream, out, ckpt, mode="append", src_dir=feed,
+                    final_nodata_batch=False,
+                )
 
-        half = files[: len(files) // 2]
-        rest = files[len(files) // 2 :]
-        for f in half:          # lifetime 1: file + in-run duplicate
-            land(f, f)
-            land(f"dup_{f}", f)
-        lifetime()
-        for f in half:          # cross-restart duplicates of half 1
-            land(f"redup_{f}", f)
-        for f in rest:          # plus the second half (+ dups)
-            land(f, f)
-            land(f"dup_{f}", f)
-        lifetime()
-        _stamp_drained(out, token)
+            half = files[: len(files) // 2]
+            rest = files[len(files) // 2 :]
+            for f in half:          # lifetime 1: file + in-run duplicate
+                land(f, f)
+                land(f"dup_{f}", f)
+            lifetime()
+            for f in half:          # cross-restart duplicates of half 1
+                land(f"redup_{f}", f)
+            for f in rest:          # plus the second half (+ dups)
+                land(f, f)
+                land(f"dup_{f}", f)
+            lifetime()
+            open(f"{out}/_SUCCESS", "w").close()
     deduped = spark.read.parquet(f"{out}/epoch=*")
     return deduped.agg(
         F.count("*").alias("n_unique"), F.sum("event_id").alias("id_checksum")

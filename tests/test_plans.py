@@ -262,12 +262,12 @@ def test_compaction_reduces_file_count(spark, sf_dir):
     """sink_compact_small_files: >=64 fragments in, <=4 files out,
     identical row count."""
     import glob
-    import os
+
+    from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import staging_dir
 
     engine.QUERIES["sink_compact_small_files"](spark, sf_dir).collect()
-    stage = f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}"
-    frag = glob.glob(f"{stage}/orders_fragmented/part-*")
-    comp = glob.glob(f"{stage}/orders_compacted/part-*")
+    frag = glob.glob(f"{staging_dir(sf_dir, 'orders_fragmented')}/part-*")
+    comp = glob.glob(f"{staging_dir(sf_dir, 'orders_compacted')}/part-*")
     assert len(frag) >= 32, len(frag)
     assert len(comp) <= 4, len(comp)
 
@@ -323,7 +323,7 @@ def test_zorder_layout_bounds_both_dims(spark, sf_dir):
     df = engine.QUERIES["sink_zorder_layout"](spark, sf_dir)
     rows = df.collect()
     assert len(rows) > 0
-    path = f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}/zorder_orders"
+    path = engine.core.staging_dir(sf_dir, "zorder_orders")
     stats = []
     for f in sorted(os.listdir(path)):
         if not f.endswith(".parquet"):

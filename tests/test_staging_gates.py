@@ -14,6 +14,8 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
+
 from pyspark.sql import functions as F
 
 import ingest_sharepoint_file_to_fabric_lakehouse_spark as engine  # noqa: F401
@@ -77,12 +79,13 @@ def test_drain_gate_resumes_and_rebuilds_on_token_change(spark, sf_dir):
     fingerprint is unchanged (the steady state reads materialized
     epochs), and a stale/corrupt stamp must force a full rebuild with
     identical values."""
-    from ingest_sharepoint_file_to_fabric_lakehouse_spark.streaming import streams as S
+    from ingest_sharepoint_file_to_fabric_lakehouse_spark import core
 
+    engine.load_all()
     fn = engine.QUERIES["stream_tumbling_live"]
     first = sorted(map(tuple, fn(spark, sf_dir).collect()))
-    out = f"{S._staging(sf_dir, 'stream_tumbling')}/out"
-    stamp = os.path.join(out, "_SG_DRAINED")
+    out = f"{core.staging_dir(sf_dir, 'stream_tumbling', core.SCRATCH_ROOT)}/out"
+    stamp = os.path.join(out, "_SG_FINGERPRINT")
     mtime = os.stat(stamp).st_mtime_ns
     again = sorted(map(tuple, fn(spark, sf_dir).collect()))
     assert again == first
@@ -96,17 +99,129 @@ def test_drain_gate_resumes_and_rebuilds_on_token_change(spark, sf_dir):
 
 
 def test_ingest_gate_rebuilds_cold_and_resumes_warm(spark, sf_dir):
-    from ingest_sharepoint_file_to_fabric_lakehouse_spark.sources import ingest as I
+    from ingest_sharepoint_file_to_fabric_lakehouse_spark import core
 
-    base = f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}/ingest"
+    engine.load_all()
+    base = core.staging_dir(sf_dir, "ingest")
     shutil.rmtree(base, ignore_errors=True)
     fn = engine.QUERIES["ingest_pipeline"]
     first = sorted(map(tuple, fn(spark, sf_dir).collect()))
-    stamp = os.path.join(base, "_SG_DRAINED")
+    stamp = os.path.join(base, "_SG_FINGERPRINT")
     assert os.path.isfile(stamp)
     mtime = os.stat(stamp).st_mtime_ns
     again = sorted(map(tuple, fn(spark, sf_dir).collect()))
     assert again == first and os.stat(stamp).st_mtime_ns == mtime
+
+
+def test_drained_stream_is_staged_state(spark, sf_dir):
+    """A drain goes through core.staged_build like every staged index:
+    a cold drain logs a build event, a warm call logs none, and the
+    staging GC sees the drained output as an artifact."""
+    import sys
+
+    from ingest_sharepoint_file_to_fabric_lakehouse_spark import core
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    import staging_gc
+
+    engine.load_all()
+    fn = engine.QUERIES["stream_tumbling_live"]
+    out = f"{core.staging_dir(sf_dir, 'stream_tumbling', core.SCRATCH_ROOT)}/out"
+    shutil.rmtree(out, ignore_errors=True)
+    n0 = len(core.STAGING_EVENTS)
+    fn(spark, sf_dir).count()
+    assert out in [p for p, _ in core.STAGING_EVENTS[n0:]], "cold drain not logged"
+    n1 = len(core.STAGING_EVENTS)
+    fn(spark, sf_dir).count()
+    assert len(core.STAGING_EVENTS) == n1, "warm call re-drained"
+    assert out in [a.path for a in staging_gc.scan(core.SCRATCH_ROOT)]
+
+
+def _own_fixture(tmp_path, sf_dir):
+    """The shared fixture under another directory name: its staged
+    state lands in a separate tree, so a deliberately failed drain
+    leaves the shared fixture's drained outputs alone."""
+    fixture = tmp_path / "sf_drain_fail"
+    fixture.symlink_to(sf_dir)
+    return str(fixture)
+
+
+@pytest.mark.parametrize(
+    "key, artifact",
+    [
+        ("stream_tumbling_live", "stream_tumbling/out"),
+        ("stream_foreach_sink", "stream_sink/out"),
+        ("stream_additive_state_merge", "stream_additive"),
+    ],
+)
+def test_timed_out_drain_is_stopped_and_not_stamped(
+    spark, sf_dir, tmp_path, monkeypatch, key, artifact
+):
+    """A drain still running at its deadline has written only some
+    epochs: it must be stopped and raised, never stamped current."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from ingest_sharepoint_file_to_fabric_lakehouse_spark import core
+    from ingest_sharepoint_file_to_fabric_lakehouse_spark.streaming import streams as S
+
+    feed = S.stage_event_files(spark, sf_dir)
+    fixture = _own_fixture(tmp_path, sf_dir)
+    out = core.staging_dir(fixture, artifact, core.SCRATCH_ROOT)
+    stopped = []
+
+    class StuckQuery:
+        def awaitTermination(self, timeout=None):
+            os.makedirs(f"{out}/epoch=0", exist_ok=True)  # a partial drain
+            return False
+
+        def stop(self):
+            stopped.append(True)
+
+    monkeypatch.setattr(S, "stage_event_files", lambda spark_, sf: feed)
+    monkeypatch.setattr(DataStreamWriter, "start", lambda self, *a, **k: StuckQuery())
+    try:
+        with pytest.raises(TimeoutError):
+            engine.QUERIES[key](spark, fixture)
+        assert stopped, "the timed-out query was left running"
+        assert not os.path.exists(os.path.join(out, "_SG_FINGERPRINT"))
+    finally:
+        shutil.rmtree(core.staging_dir(fixture, "", core.SCRATCH_ROOT), ignore_errors=True)
+
+
+def test_partial_sharepoint_feed_is_not_stamped(spark, sf_dir, tmp_path, monkeypatch):
+    """A SharePoint change-feed drain that misses its deadline with
+    arrivals still undelivered must raise, not stamp the partial log."""
+    import time
+
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from ingest_sharepoint_file_to_fabric_lakehouse_spark import core
+
+    engine.load_all()
+    fixture = _own_fixture(tmp_path, sf_dir)
+    out = f"{core.staging_dir(fixture, 'stream_ds_sharepoint')}/out"
+
+    class StalledQuery:  # leaves a partial epoch, then stalls
+        def stop(self):
+            os.makedirs(f"{out}/epoch=0", exist_ok=True)
+
+        def awaitTermination(self, timeout=None):
+            return True
+
+    # the poll loop sleeps 0.1 s per round against a 120 s deadline:
+    # let each sleep advance the clock a minute instead
+    skew = [0.0]
+    real_time = time.time
+    monkeypatch.setattr(time, "time", lambda: real_time() + skew[0])
+    monkeypatch.setattr(time, "sleep", lambda s: skew.__setitem__(0, skew[0] + 60.0))
+    monkeypatch.setattr(DataStreamWriter, "start", lambda self, *a, **k: StalledQuery())
+    try:
+        with pytest.raises(TimeoutError):
+            engine.QUERIES["stream_datasource_sharepoint"](spark, fixture)
+        assert not os.path.exists(os.path.join(out, "_SG_FINGERPRINT"))
+    finally:
+        monkeypatch.undo()
+        shutil.rmtree(core.staging_dir(fixture, ""), ignore_errors=True)
 
 
 def test_staged_build_serializes_racing_builders(spark, tmp_path):
@@ -281,6 +396,7 @@ def test_pq_codebook_repair_runs_under_build_lease(spark, sf_dir, monkeypatch):
     from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import (
         staged_build as real_staged_build,
         staging_current,
+        staging_dir,
     )
     from ingest_sharepoint_file_to_fabric_lakehouse_spark.operators import (
         similarity as sim,
@@ -288,7 +404,7 @@ def test_pq_codebook_repair_runs_under_build_lease(spark, sf_dir, monkeypatch):
 
     engine.load_all()
     engine.QUERIES["sim_pq_adc_topk"](spark, sf_dir).count()  # build once
-    cb_dir = f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}/pq_codebook_v1"
+    cb_dir = staging_dir(sf_dir, "pq_codebook_v1")
     cb_file = f"{cb_dir}/codebook.json"
     assert os.path.isfile(cb_file)
     with open(cb_file) as fh:

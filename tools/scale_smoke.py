@@ -182,14 +182,16 @@ def main() -> None:
     scratch_root = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
     dst = os.path.join(scratch_root, f"sgscale_x{args.mult}")
     shutil.rmtree(dst, ignore_errors=True)
-    # stale derived state for the synthesized basename must go too:
-    # batch staged indexes are fingerprint-gated, but the streaming
-    # batch-file staging keys on directory existence only — a prior
-    # run's files would silently serve old data.
-    for root in {scratch_root, "/tmp"}:
-        shutil.rmtree(
-            os.path.join(root, "sgdata", os.path.basename(dst)), ignore_errors=True
-        )
+    # stale derived state for the synthesized basename goes too, so
+    # every staged index and drained stream is rebuilt from scratch
+    from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import (
+        SCRATCH_ROOT,
+        STAGING_ROOT,
+        staging_dir,
+    )
+
+    for root in {STAGING_ROOT, SCRATCH_ROOT}:
+        shutil.rmtree(staging_dir(dst, "", root), ignore_errors=True)
     t0 = time.time()
     synthesize(args.sf, dst, args.mult)
     print(f"# synthesized {args.mult}x facts at {dst} in {time.time() - t0:.1f}s",

@@ -1,4 +1,6 @@
-"""LRU garbage collector for the /tmp/sgdata staging area.
+"""LRU garbage collector for the staging area: every root the engine
+stages under (``core.STAGING_ROOT`` for indexes, layouts and the
+ingest lifecycle; ``core.SCRATCH_ROOT`` for drained streams).
 
 Staged index artifacts (minhash frames, PPJoin ``jp_*`` layouts, BM25
 inverted indexes, k-means codebooks, bucketed join tables, …) accrete
@@ -23,6 +25,7 @@ Policy, applied in order:
 Usage::
 
     python tools/staging_gc.py                      # report only
+    python tools/staging_gc.py --base /tmp/sgdata   # one root only
     python tools/staging_gc.py --budget-gb 4        # LRU to 4 GiB
     python tools/staging_gc.py --max-age-days 7 --budget-gb 4
 """
@@ -37,9 +40,18 @@ import sys
 import time
 from dataclasses import dataclass
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import (  # noqa: E402
+    SCRATCH_ROOT,
+    STAGING_ROOT,
+)
+
 FINGERPRINT = "_SG_FINGERPRINT"
 LASTUSE = "_SG_LASTUSE"
-DEFAULT_BASE = "/tmp/sgdata"
+# the scratch root falls back to the staging root where there is no
+# tmpfs; dict.fromkeys keeps one copy, in order
+DEFAULT_BASES = tuple(dict.fromkeys((STAGING_ROOT, SCRATCH_ROOT)))
 
 
 @dataclass
@@ -60,14 +72,20 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-def scan(base: str = DEFAULT_BASE) -> list[Artifact]:
-    """Find every staged artifact under ``base`` (any depth — artifacts
-    live at ``<base>/<fixture>/<name>``, but the walk doesn't assume
-    that).  A directory with a fingerprint is one atomic unit; the walk
-    does not descend into it (nested parquet partition dirs belong to
-    the artifact)."""
+def _bases(base: str | None) -> tuple[str, ...]:
+    return DEFAULT_BASES if base is None else (base,)
+
+
+def scan(base: str | None = None) -> list[Artifact]:
+    """Find every staged artifact under ``base`` — by default under
+    every staging root (any depth — artifacts live at
+    ``<root>/<fixture>/<name>``, but the walk doesn't assume that).  A
+    directory with a fingerprint is one atomic unit; the walk does not
+    descend into it (nested parquet partition dirs belong to the
+    artifact)."""
     found: list[Artifact] = []
-    for root, dirs, files in os.walk(base):
+    walks = (w for b in _bases(base) for w in os.walk(b))
+    for root, dirs, files in walks:
         if FINGERPRINT in files:
             lu = os.path.join(root, LASTUSE)
             try:
@@ -83,7 +101,7 @@ def scan(base: str = DEFAULT_BASE) -> list[Artifact]:
 
 
 def gc(
-    base: str = DEFAULT_BASE,
+    base: str | None = None,
     budget_bytes: int | None = None,
     max_age_days: float | None = None,
     dry_run: bool = False,
@@ -130,14 +148,15 @@ def gc(
                 pass
     # prune now-empty fixture dirs so the tree doesn't accrete husks
     if not dry_run:
-        for root, dirs, files in list(os.walk(base, topdown=False)):
-            if root != base and not dirs and not files:
-                try:
-                    os.rmdir(root)
-                except OSError:
-                    pass
+        for b in _bases(base):
+            for root, dirs, files in list(os.walk(b, topdown=False)):
+                if root != b and not dirs and not files:
+                    try:
+                        os.rmdir(root)
+                    except OSError:
+                        pass
     return {
-        "base": base,
+        "bases": list(_bases(base)),
         "scanned": len(arts),
         "scanned_bytes": sum(a.bytes for a in arts),
         "evicted": [
@@ -153,13 +172,13 @@ def gc(
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--base", default=DEFAULT_BASE)
+    ap.add_argument("--base", default=None, help="one staging root (default: all of them)")
     ap.add_argument("--budget-gb", type=float, default=None)
     ap.add_argument("--max-age-days", type=float, default=None)
     ap.add_argument("--dry-run", action="store_true")
     args = ap.parse_args()
-    if not os.path.isdir(args.base):
-        print(json.dumps({"base": args.base, "scanned": 0, "note": "no staging dir"}))
+    if not any(os.path.isdir(b) for b in _bases(args.base)):
+        print(json.dumps({"bases": list(_bases(args.base)), "scanned": 0, "note": "no staging dir"}))
         return 0
     budget = int(args.budget_gb * (1 << 30)) if args.budget_gb is not None else None
     dry = args.dry_run or (budget is None and args.max_age_days is None)

@@ -3,7 +3,7 @@ config (heap, Kryo, code cache, /dev/shm local dir, calibration) but
 times only the keys given on argv, N passes each, printing min/median.
 
 ``--cold`` additionally measures each key's COLD path: the fixture's
-staged-artifact fingerprints under /tmp/sgdata are invalidated before
+staged-artifact fingerprints under every staging root are invalidated before
 an extra first pass, so that pass pays the full index build (minhash
 frames, PPJoin jp_*, BM25 inverted index, codebooks, …).  Cold and
 warm numbers print separately and a per-key map is merged into
@@ -95,20 +95,25 @@ def main() -> None:
     spark.range(2_000_000_000).selectExpr("sum(xxhash64(id) % 1000000) s").collect()
     print(f"calib {time.time() - calib_t0:.3f}s", file=sys.stderr)
 
-    def invalidate_staging(sf: str) -> int:
-        """Drop every staged artifact's fingerprint for this fixture so
-        the next pass rebuilds (the artifact data stays; the gate is
-        the fingerprint, so this is exactly the 'regenerated corpus'
-        cold path)."""
-        base = f"/tmp/sgdata/{os.path.basename(sf.rstrip('/'))}"
-        dropped = 0
-        for root, _dirs, files in os.walk(base):
-            if "_SG_FINGERPRINT" in files:
-                os.unlink(os.path.join(root, "_SG_FINGERPRINT"))
-                dropped += 1
-        return dropped
+    from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import (
+        SCRATCH_ROOT,
+        STAGING_EVENTS,
+        STAGING_ROOT,
+        staging_dir,
+    )
 
-    from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import STAGING_EVENTS
+    def invalidate_staging(sf: str) -> int:
+        """Drop every staged artifact's fingerprint for this fixture —
+        indexes and drained streams alike — so the next pass rebuilds
+        (the artifact data stays; the gate is the fingerprint, so this
+        is exactly the 'regenerated corpus' cold path)."""
+        dropped = 0
+        for root_dir in {STAGING_ROOT, SCRATCH_ROOT}:
+            for root, _dirs, files in os.walk(staging_dir(sf, "", root_dir)):
+                if "_SG_FINGERPRINT" in files:
+                    os.unlink(os.path.join(root, "_SG_FINGERPRINT"))
+                    dropped += 1
+        return dropped
 
     cold_report: dict[str, dict] = {}
     forced_report: dict[str, dict] = {}
