@@ -5,97 +5,56 @@ declared-but-unimplemented Delta sink (`config.py:16`,
 delta-spark isn't available in this environment, so the engine ships a
 portable MERGE built from a full-outer join; the same call site swaps
 to ``DeltaTable.merge`` when Delta is on the classpath (import-gated
-below).
+below).  The join shuffles both sides on the merge key — identical
+shuffle shape to Delta's own MERGE.
 
-Two write strategies, chosen by target layout:
+Two entry points share one commit protocol:
 
-* **Partitioned target** (:func:`merge_upsert_partitioned`): only the
-  partitions present in the source are read (partition-pruned scan),
-  merged, and rewritten via dynamic partition overwrite — a single
-  write that replaces exactly the touched partition directories.
-  Untouched partitions are never read or written.  This is the 100 TB
-  path: a MERGE touching one day of a year-partitioned table costs one
-  day, not the table.
-* **Unpartitioned target** (:func:`merge_upsert`): full-outer-join
-  merge staged to a temp directory (ONE write of the merged result),
-  then committed with the rename protocol below.
+* :func:`merge_upsert` merges into an unpartitioned target; the merged
+  table is one unit, the whole table.
+* :func:`merge_upsert_partitioned` reads only the partitions present in
+  the source (partition-pruned scan); each touched partition dir is
+  one unit.  Untouched partitions are never read or written — a MERGE
+  touching one day of a year-partitioned 100 TB table costs one day,
+  not the table.
 
-The join shuffles both sides on the merge key — identical shuffle
-shape to Delta's own MERGE.
-
-Commit protocol (unpartitioned path)
-------------------------------------
+Commit protocol
+---------------
 Renames are atomic metadata operations on POSIX and HDFS-compatible
-stores; writes are not.  The protocol makes every crash point
-recoverable by construction:
+stores; writes are not.  Every step runs under the writer lease
+(Concurrency, below):
 
-1. ``recover_table`` — heal any prior crash (rules below), leaving a
-   committed table and no stray dirs.
-2. Stage: write the merged result to ``<target>__merge_tmp``.  Spark's
-   committer drops a ``_SUCCESS`` marker only when the write finished —
-   that marker is the staged table's completeness witness.
-3. ``rename(target, <target>__merge_bak)`` — the old table is intact
-   under a new name; the commit is now in flight.
-4. ``rename(tmp, target)`` — THE commit point.  Before it, recovery
-   rolls back; after it, the new table is live.
-5. ``delete(bak)`` — post-commit cleanup.
+1. :func:`recover_table` — heal any prior crash (rules below).
+2. Stage: write the merged units to ``<target>__merge_ptmp`` — the
+   partition dirs ``p=v`` of a partitioned target, or ``_table`` for an
+   unpartitioned one.  The live table is not written.
+3. Re-verify the lease, then write ``ptmp/_MERGE_PLAN`` (the unit
+   names, one per line) to a temp name and rename it into place.  The
+   plan is written only after the stage write returned, so its presence
+   is THE commit point: before it, recovery discards the stage; after
+   it, recovery finishes the swap.
+4. Per planned unit, :func:`_swap`: rename the live unit to its backup
+   (``target/_merge_bak_p=v`` — the ``_`` prefix hides it from Spark's
+   input discovery — or ``<target>__merge_bak`` for the whole table),
+   rename the staged unit in, delete the backup.  The lease is
+   re-verified before each unit.
+5. Delete ``ptmp`` (plan consumed).
 
-Recovery rules (``recover_table``; also run by ``read_table``):
+Recovery rules (:func:`recover_table`, the only healer):
 
-* target exists → committed.  Delete stray ``tmp`` (crash during/after
-  step 2: old state) and stray ``bak`` (crash before step 5: new state).
-* target missing, ``bak`` exists, ``tmp/_SUCCESS`` exists → crash
-  between steps 3 and 4 with a COMPLETE staged table: roll forward
-  (``rename(tmp, target)``, delete bak).
-* target missing, ``bak`` exists, no ``tmp/_SUCCESS`` → staged table
-  not provably complete: roll back (``rename(bak, target)``, delete
-  tmp).
-* target missing, no ``bak``, ``tmp`` exists → no commit ever started
-  against a live table: delete tmp, report missing target.
+* no ``ptmp`` → committed; a stray partition backup is restored if its
+  live dir is missing, deleted otherwise.
+* ``ptmp`` without a plan → the stage never reached the commit point:
+  delete it (after the same backup sweep); the old table is intact.
+* ``ptmp`` with a plan → roll forward: a unit whose staged dir is gone
+  is already swapped in (its backup is deleted); the others go through
+  :func:`_swap`.  Then delete ptmp.
 
-Every state therefore reads back as either the complete OLD or the
-complete NEW table — never torn (`tests/test_operators.py::
-test_merge_upsert_crash_*` kills the writer at each step and asserts
-exactly this).
-
-Commit protocol (partitioned path)
-----------------------------------
-:func:`merge_upsert_partitioned` extends the same rename discipline to
-exactly the touched partitions (a dynamic partition overwrite straight
-onto the live table has no crash story — Spark's job commit mid-crash
-can tear touched partition dirs with nothing to roll back to):
-
-1. ``recover_table_partitioned`` — heal any prior crash.
-2. Stage: write the merged TOUCHED partitions to
-   ``<target>__merge_ptmp`` (partitioned layout; ``_SUCCESS`` is the
-   completeness witness) — never the live table.
-3. Write ``ptmp/_MERGE_PLAN``: the staged partition dir names.  The
-   plan+``_SUCCESS`` pair is the roll-FORWARD authorization; no swap
-   ever starts before both exist.
-4. Per planned partition ``p=v``: rename ``target/p=v`` →
-   ``target/_merge_bak_p=v`` (old data aside; the ``_`` prefix hides
-   it from Spark's input discovery), rename ``ptmp/p=v`` →
-   ``target/p=v`` (THE commit point for that partition), delete the
-   bak.  Each rename is atomic; the lease is re-verified every
-   iteration.
-5. Delete ``ptmp`` (plan consumed) — post-commit cleanup.
-
-Recovery rules (``recover_table_partitioned``):
-
-* no ``ptmp`` → committed; heal any stray bak (target partition
-  present → delete bak; missing → restore it).
-* ``ptmp`` without plan+``_SUCCESS`` → stage incomplete, no swap ever
-  started: delete ptmp (old table intact).
-* ``ptmp`` with plan+``_SUCCESS`` → resume the swap loop exactly (it
-  is idempotent: partitions already committed have no ``ptmp/p=v``
-  left and are skipped), then delete ptmp.
-
-A crash at ANY step therefore recovers to the complete OLD table
-(before the plan write) or the complete NEW table (after) — per
-partition the data is always one or the other, never torn.  Unlike the
-unpartitioned path, intermediate crash states are rolled FORWARD (some
-partitions may already be committed); the plan file is what makes that
-decidable.  Visibility: a lock-free reader overlapping the swap loop
+A crash at any step therefore reads back as the complete OLD table
+(before the plan rename) or the complete NEW table (after); the
+kill-at-every-step tests in ``tests/test_operators.py`` and
+``tests/test_merge_lock.py`` assert exactly this on both layouts.
+Visibility: a read that listed a partitioned table before a swap began
 can observe partition ``v`` new while ``w`` is still old — the
 cross-partition snapshot isolation a parquet directory layout cannot
 provide (that is Delta's transaction log; the ``HAVE_DELTA`` dispatch
@@ -116,24 +75,25 @@ Concurrency
   lock in ``finally``; only process death leaves it, which is exactly
   the case the TTL covers.  Because the STAGE write is arbitrarily
   long, the writer re-verifies lease ownership (and re-arms the TTL)
-  between staging and the destructive renames — a stage that outlived
-  the TTL and lost its lease to a takeover ABORTS with
+  between staging and the plan rename — a stage that outlived the TTL
+  and lost its lease to a takeover ABORTS with
   :class:`MergeLockTimeout` instead of interleaving renames with the
   new owner (:func:`_hold_lease`).
-* **Readers** are lock-free.  ``read_table`` runs recovery only when
-  the target path is MISSING (a committed table needs none), so a
-  reader can no longer delete a live writer's in-progress ``tmp`` or
-  free its ``bak`` mid-commit.  The one remaining overlap — a reader
-  arriving between steps 3 and 4 rolls the complete staged table
-  forward itself — is tolerated by the writer: a failed step-4 rename
-  re-probes the state and treats "target present, tmp gone" as its
-  own commit having been completed by the recoverer.
+* **Only the lease holder heals.**  On a committed table (target
+  present, no ``ptmp``) ``read_table`` makes two ``exists`` probes and
+  reads.  If the target is missing or a stage exists, it takes the
+  lease (1 s wait, 600 s staleness bar), runs :func:`recover_table`,
+  then reads.  If a live lease blocks it, it reads the live table only
+  when no plan exists (a stage in progress leaves the table intact);
+  a missing target or a plan mid-swap raises :class:`MergeLockTimeout`
+  instead of returning a partial table.  No healer ever renames under
+  a live writer.
 """
 
 from __future__ import annotations
 
 import logging
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -177,53 +137,33 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     table must NOT be read as bare parquet (stale versions' files
     would double-count), so the format is detected, not assumed.
 
-    UNPARTITIONED recovery runs ONLY when the target path is missing
-    (one metadata ``exists`` probe when nothing is wrong): a present
-    target is by protocol a complete committed table, and running the
-    stray-dir sweep against it would race a LIVE writer — deleting its
-    in-progress ``tmp`` between steps 2-3, or freeing its ``bak``
-    between 3-4.  Stray-dir cleanup after a crash is merge_upsert's
-    step-1 job, not the reader's.  A reader arriving after a mid-swap
-    crash (target missing) still heals and sees a complete table.
-
-    PARTITIONED recovery is additionally probed via the ``ptmp`` dir
-    (a crashed partitioned merge leaves the target PRESENT but
-    possibly missing mid-swap partitions) and — because that state is
-    indistinguishable from a live writer's in-progress stage — runs
-    only under the lease; a live lease defers healing to the writer."""
+    A committed table costs two ``exists`` probes (target present, no
+    stage).  Otherwise only the lease holder heals: take the lease
+    (1 s wait, so a stale lock still reaches the takeover branch; a
+    live writer costs the reader at most that poll), run
+    :func:`recover_table`, read.  The fixed 600 s staleness bar is safe
+    against any writer-configured TTL because :func:`_lease_keeper`
+    beats at least every 60 s.  If a live lease blocks the heal, the
+    table is read as it stands only while no plan exists (a stage in
+    progress has not touched it); a missing target or a swap in flight
+    raises :class:`MergeLockTimeout` rather than return a partial
+    table."""
     if HAVE_DELTA and DeltaTable.isDeltaTable(spark, path):  # pragma: no cover
         return spark.read.format("delta").load(path)
     fs, jtarget = _fs(spark, path)
-    if not fs.exists(jtarget):
-        recover_table(spark, path)
     mk = spark._jvm.org.apache.hadoop.fs.Path
-    if fs.exists(mk(path.rstrip("/") + "__merge_ptmp")):
-        # A crashed PARTITIONED merge leaves the target present but
-        # possibly missing mid-swap partitions; heal it — unless a
-        # LIVE writer owns the lease (fresh lock ⇒ the ptmp is its
-        # in-progress stage, which healing would DELETE from under it;
-        # the writer's _lease_keeper re-arms the TTL continuously, so
-        # fresh means live and stale means dead).  Honest contract for
-        # the deferred case: a writer killed mid-swap leaves the swap
-        # gap VISIBLE — this read returns the table without the
-        # partition that was mid-rename (wrong results for that slice,
-        # not unavailability) until the lease ages out (≤ TTL) or the
-        # next writer heals it.  The mid-swap window is a handful of
-        # metadata renames (~ms), and cross-partition snapshot
-        # isolation on plain directories is exactly what the Delta
-        # dispatch exists for.  (The 1s wait exists so a STALE lock
-        # still reaches the takeover branch; a live writer costs the
-        # reader at most that poll.)  The fixed 600s staleness bar is
-        # safe against ANY writer-configured TTL because _lease_keeper
-        # caps its beat interval at 60s: a LIVE writer's lease mtime is
-        # always an order of magnitude fresher than this bar.
+    if not fs.exists(jtarget) or fs.exists(_ptmp(mk, path)):
         try:
             tok = _acquire_lock(spark, path, lock_ttl_sec=600.0, lock_wait_sec=1.0)
         except MergeLockTimeout:
-            tok = None
-        if tok is not None:
+            if not fs.exists(jtarget) or fs.exists(_ptmp(mk, path, _PLAN)):
+                raise MergeLockTimeout(
+                    f"{path} is mid-commit under another writer's lease; "
+                    "retry once the lease is released or ages out"
+                ) from None
+        else:
             try:
-                recover_table_partitioned(spark, path)
+                recover_table(spark, path)
             finally:
                 _release_lock(spark, path, tok)
     return spark.read.parquet(path)
@@ -472,7 +412,7 @@ def _lease_keeper(
     checkpoints (post-stage, per swap iteration), which left the
     LONGEST phase — the stage write itself — un-refreshed: a stage
     outliving ``lock_ttl_sec`` made the lease takeover-eligible, and
-    ``read_table``'s ptmp probe (or a rival writer) could steal it and
+    ``read_table``'s heal path (or a rival writer) could steal it and
     delete the LIVE writer's in-flight stage.  A daemon thread now
     beats ``_hold_lease`` every ttl/10 for the section's duration, so
     a fresh lease means a LIVE holder and a stale one means a DEAD
@@ -485,7 +425,7 @@ def _lease_keeper(
     depth.
 
     The beat interval is ``ttl/10`` CAPPED AT 60 s: ``read_table``'s
-    ptmp-heal path judges a lease stale against its own fixed 600 s
+    heal path judges a lease stale against its own fixed 600 s
     TTL, so an uncapped interval under a writer configured with
     ``lock_ttl_sec > 6000`` would leave >600 s beat gaps — long enough
     for a concurrent reader to judge the LIVE writer dead and delete
@@ -594,77 +534,61 @@ def _sweep_lock_debris(
             pass  # listing/delete races are benign here
 
 
-def _paths(spark: SparkSession, target_path: str):
-    fs, jtarget = _fs(spark, target_path)
-    mk = spark._jvm.org.apache.hadoop.fs.Path
-    base = target_path.rstrip("/")
-    return fs, jtarget, mk(base + "__merge_tmp"), mk(base + "__merge_bak"), mk(
-        base + "__merge_tmp/_SUCCESS"
-    )
-
-
-def recover_table(spark: SparkSession, target_path: str) -> str:
-    """Heal a crashed :func:`merge_upsert` per the module-doc protocol.
-
-    Returns which rule fired: ``"committed"`` (target intact, stray
-    dirs removed), ``"rolled_forward"`` (complete staged table
-    promoted), ``"rolled_back"`` (old table restored), or
-    ``"missing"`` (no table and nothing recoverable).  Idempotent —
-    every exit leaves a state where re-running is a no-op.
-    """
-    fs, jtarget, jtmp, jbak, jtmp_ok = _paths(spark, target_path)
-    _sweep_lock_debris(spark, target_path)
-    if fs.exists(jtarget):
-        fs.delete(jtmp, True)
-        fs.delete(jbak, True)
-        return "committed"
-
-    def _try_rename(src, why: str) -> None:
-        # Two RECOVERERS can race the same crash state (e.g. two
-        # readers both find the target missing).  The loser's rename
-        # returns false or THROWS (local-FS copy fallback on the
-        # vanished source); either way, the winner having restored the
-        # target is success — only a still-missing target is an error.
-        try:
-            ok = fs.rename(src, jtarget)
-        except Exception:
-            ok = False
-        if not ok and not fs.exists(jtarget):
-            raise OSError(f"recovery rename {why} -> {target_path} failed")
-
-    if fs.exists(jbak):
-        if fs.exists(jtmp_ok):
-            _try_rename(jtmp, "tmp")
-            fs.delete(jbak, True)
-            return "rolled_forward"
-        fs.delete(jtmp, True)
-        _try_rename(jbak, "bak")
-        return "rolled_back"
-    fs.delete(jtmp, True)
-    return "missing"
-
-
+_PLAN = "_MERGE_PLAN"
+_WHOLE = "_table"  # the one plan unit of an unpartitioned target
 _BAK_PREFIX = "_merge_bak_"
 
 
-def _ppaths(spark: SparkSession, target_path: str):
-    fs, jtarget = _fs(spark, target_path)
-    mk = spark._jvm.org.apache.hadoop.fs.Path
+def _ptmp(mk, target_path: str, name: str = ""):
+    """The stage dir ``<target>__merge_ptmp``, or ``name`` inside it
+    (``mk``: the Hadoop ``Path`` class, resolved once per call site)."""
+    return mk(target_path.rstrip("/") + "__merge_ptmp" + ("/" + name if name else ""))
+
+
+def _unit(mk, target_path: str, d: str):
+    """(staged, live, backup) paths of plan unit ``d``: a partition dir
+    name, or :data:`_WHOLE` for the whole table."""
     base = target_path.rstrip("/")
-    jptmp = mk(base + "__merge_ptmp")
-    return fs, jtarget, mk, jptmp, mk(base + "__merge_ptmp/_MERGE_PLAN"), mk(
-        base + "__merge_ptmp/_SUCCESS"
-    )
+    if d == _WHOLE:
+        return _ptmp(mk, base, d), mk(base), mk(base + "__merge_bak")
+    return _ptmp(mk, base, d), mk(f"{base}/{d}"), mk(f"{base}/{_BAK_PREFIX}{d}")
 
 
-def _heal_baks(fs, jtarget, mk) -> None:
-    """Sweep stray per-partition backups: a bak whose live partition
-    exists is post-commit debris (delete); one whose live partition is
-    MISSING is a mid-swap orphan (restore it).  Rename losses to a
-    concurrent recoverer are tolerated — the dir existing afterwards
-    is what matters."""
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise OSError(f"rename {src} -> {dst} failed")
+
+
+def _swap(spark, fs, target_path, units, token=None, crashpoint=lambda step: None) -> None:
+    """Swap each planned unit — a (staged, live, backup) path triple —
+    in: live dir → backup, staged dir → live (that unit's commit),
+    backup deleted.  The writer passes its lease ``token``, re-verified
+    (and the TTL re-armed) before every unit — the swap must never
+    interleave with a takeover's.  Recovery passes the units still
+    staged and no token: it runs under the caller's lease."""
+    for i, (jsrc, jdst, jbak) in enumerate(units):
+        if token is not None and not _hold_lease(spark, target_path, token):
+            raise MergeLockTimeout(
+                f"merge lease on {target_path} lost during the swap (unit "
+                f"{i}/{len(units)}); aborting — recovery resumes the swap "
+                "from the plan file"
+            )
+        if fs.exists(jdst):
+            _rename(fs, jdst, jbak)
+        crashpoint(f"after_backup_rename:{i}")
+        _rename(fs, jsrc, jdst)
+        crashpoint(f"after_commit_rename:{i}")
+        fs.delete(jbak, True)
+        crashpoint(f"after_bak_delete:{i}")
+
+
+def _heal_baks(fs, mk, target_path) -> bool:
+    """Sweep stray partition backups: one whose live dir exists is
+    post-commit debris (delete); one whose live dir is missing is
+    restored.  Returns whether the target exists."""
+    jtarget = mk(target_path.rstrip("/"))
     if not fs.exists(jtarget):
-        return
+        return False
     for st in fs.listStatus(jtarget):
         name = st.getPath().getName()
         if not name.startswith(_BAK_PREFIX):
@@ -673,32 +597,30 @@ def _heal_baks(fs, jtarget, mk) -> None:
         if fs.exists(jdst):
             fs.delete(st.getPath(), True)
         else:
-            try:
-                fs.rename(st.getPath(), jdst)
-            except Exception:
-                pass
+            _rename(fs, st.getPath(), jdst)
+    return True
 
 
-def recover_table_partitioned(spark: SparkSession, target_path: str) -> str:
-    """Heal a crashed :func:`merge_upsert_partitioned` per the
-    module-doc partitioned protocol.  Caller should hold the writer
-    lease (the writer's step 1 and ``read_table``'s ptmp probe both
-    do).  Idempotent; tolerates a racing recoverer the same way
-    :func:`recover_table` does.
+def recover_table(spark: SparkSession, target_path: str) -> str:
+    """Heal a crashed merge per the module-doc protocol — the only
+    healer, for both layouts.  The caller holds the lease (the writer's
+    step 1 and ``read_table`` do), so no rename here races a writer.
 
-    Returns ``"committed"`` (no ptmp; stray baks healed),
-    ``"rolled_back"`` (incomplete stage discarded — old table intact),
-    or ``"rolled_forward"`` (swap loop resumed to completion — new
-    data live in every planned partition)."""
-    fs, jtarget, mk, jptmp, jplan, jptmp_ok = _ppaths(spark, target_path)
+    Returns ``"committed"`` (no stage; stray backups healed),
+    ``"rolled_back"`` (a stage without a plan discarded — old table
+    intact), ``"rolled_forward"`` (the planned swap finished — new
+    table live) or ``"missing"`` (no table, nothing staged).
+    Idempotent: every exit leaves a state where re-running is a no-op.
+    """
+    fs, _ = _fs(spark, target_path)
+    mk = spark._jvm.org.apache.hadoop.fs.Path
     _sweep_lock_debris(spark, target_path)
+    jptmp = _ptmp(mk, target_path)
     if not fs.exists(jptmp):
-        _heal_baks(fs, jtarget, mk)
-        return "committed"
-    if not (fs.exists(jplan) and fs.exists(jptmp_ok)):
-        # Stage never finished ⇒ by protocol no swap ever started; any
-        # bak is an OLDER crash's debris.  Old table is intact.
-        _heal_baks(fs, jtarget, mk)
+        return "committed" if _heal_baks(fs, mk, target_path) else "missing"
+    jplan = _ptmp(mk, target_path, _PLAN)
+    if not fs.exists(jplan):
+        _heal_baks(fs, mk, target_path)
         fs.delete(jptmp, True)
         return "rolled_back"
     stream = fs.open(jplan)
@@ -708,39 +630,16 @@ def recover_table_partitioned(spark: SparkSession, target_path: str) -> str:
     # where split() would shred "p=new york".
     plan = [d for d in bytes(stream.readAllBytes()).decode().splitlines() if d]
     stream.close()
+    pending = []
     for d in plan:
-        _swap_partition(fs, mk, jtarget, jptmp, d)
+        unit = _unit(mk, target_path, d)
+        if fs.exists(unit[0]):
+            pending.append(unit)
+        else:  # already swapped in: only its backup is left
+            fs.delete(unit[2], True)
+    _swap(spark, fs, target_path, pending)
     fs.delete(jptmp, True)
     return "rolled_forward"
-
-
-def _swap_partition(fs, mk, jtarget, jptmp, d: str) -> None:
-    """Commit one staged partition dir ``d`` (idempotent resume step):
-    old dir aside → staged dir in → bak gone.  Rename failures against
-    a concurrent recoverer resolve by re-probing the surviving state,
-    mirroring ``recover_table._try_rename``."""
-    jsrc = mk(jptmp.toString() + "/" + d)
-    jdst = mk(jtarget.toString() + "/" + d)
-    jbak = mk(jtarget.toString() + "/" + _BAK_PREFIX + d)
-    if fs.exists(jsrc):
-        if fs.exists(jdst):
-            try:
-                fs.rename(jdst, jbak)
-            except Exception:
-                pass
-        try:
-            ok = fs.rename(jsrc, jdst)
-        except Exception:
-            ok = False
-        if not ok and not fs.exists(jdst):
-            raise OSError(f"partition commit rename {d} failed")
-    if fs.exists(jdst):
-        fs.delete(jbak, True)
-    elif fs.exists(jbak):  # defensive: staged dir lost, old data wins
-        try:
-            fs.rename(jbak, jdst)
-        except Exception:
-            pass
 
 
 def _merged_frame(target: DataFrame, source: DataFrame, key: str) -> DataFrame:
@@ -775,12 +674,11 @@ def merge_upsert(
     _crash: str | None = None,
     lock_ttl_sec: float = 600.0,
     lock_wait_sec: float = 60.0,
-    _between_backup_and_commit=None,
     _after_stage=None,
     _held_token: str | None = None,
 ) -> None:
-    """MERGE INTO an *unpartitioned* target (see module doc: staged
-    write + the documented atomic-rename commit protocol; idempotent
+    """MERGE INTO an *unpartitioned* target: the whole merged table is
+    staged and committed as the plan's one unit (module doc; idempotent
     re-ingest semantics the reference lacks, SURVEY.md §4.1
     "Incremental/exactly-once").
 
@@ -789,116 +687,27 @@ def merge_upsert(
     dance needed; the portable commit-protocol path is the fallback.
 
     ``_crash`` is the test-only crash-injection hook: naming a step
-    (``"after_stage_write"``, ``"after_backup_rename"``,
-    ``"after_commit_rename"``) raises :class:`SimulatedCrash` right
-    after it, skipping all subsequent rename-protocol steps — the
-    on-disk table state a process kill at that instant leaves.  There
-    is deliberately NO ``finally`` cleanup of tmp/bak: a crashed run's
-    debris is healed by the NEXT ``recover_table`` (step 1), which is
-    what makes the simulation faithful.  The writer LEASE, by
-    contrast, IS released in ``finally`` — a live process's failure
-    must free the lease immediately; only real process death leaves
-    it, and that is precisely the case ``lock_ttl_sec``'s stale
-    takeover exists for (forged-stale-lock test pins it).
+    (``"after_stage_write"``, ``"after_plan_tmp_write"``,
+    ``"after_plan_write"``, ``"after_backup_rename:0"``,
+    ``"after_commit_rename:0"``, ``"after_bak_delete:0"``,
+    ``"before_ptmp_delete"``) raises :class:`SimulatedCrash` right
+    after it, skipping every later step — the on-disk table state a
+    process kill at that instant leaves.  There is deliberately NO
+    ``finally`` cleanup of the stage: a crashed run's debris is healed
+    by the NEXT ``recover_table``, which is what makes the simulation
+    faithful.  The writer LEASE, by contrast, IS released in
+    ``finally`` — a live process's failure must free the lease
+    immediately; only real process death leaves it, and that is
+    precisely the case ``lock_ttl_sec``'s stale takeover exists for.
+    ``_after_stage`` is a test-only hook run after the stage write.
+    ``_held_token``: the caller already holds this target's lease (via
+    :func:`merge_lease`) — run under it, don't re-acquire (a same-path
+    second acquire would deadlock until timeout) and don't release it.
     """
-    if HAVE_DELTA and DeltaTable.isDeltaTable(spark, target_path):  # pragma: no cover
-        (
-            DeltaTable.forPath(spark, target_path)
-            .alias("t")
-            .merge(source.alias("s"), f"t.{key} = s.{key}")
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        return
-
-    def crashpoint(step: str) -> None:
-        if _crash == step:
-            raise SimulatedCrash(step)
-
-    # ``_held_token``: the caller already holds this target's lease
-    # (via :func:`merge_lease`) — run under it, don't re-acquire (the
-    # same-path second acquire would deadlock until timeout) and don't
-    # release on exit (the lease outlives this call by design).
-    from contextlib import nullcontext
-
-    token = _held_token or _acquire_lock(
-        spark, target_path, lock_ttl_sec, lock_wait_sec
+    _merge(
+        spark, target_path, source, key, None, None,
+        _crash, lock_ttl_sec, lock_wait_sec, _after_stage, _held_token,
     )
-    keeper = (
-        _lease_keeper(spark, target_path, token, lock_ttl_sec)
-        if _held_token is None
-        else nullcontext()  # the outer merge_lease runs the keeper
-    )
-    try:
-        with keeper:
-            # Step 1: heal any prior crash before reading the target.
-            state = recover_table(spark, target_path)
-            if state == "missing":
-                raise FileNotFoundError(f"merge target does not exist: {target_path}")
-            fs, jtarget, jtmp, jbak, _ = _paths(spark, target_path)
-            target = spark.read.parquet(target_path)
-            merged = _merged_frame(target, source, key)
-
-            # Step 2: stage the merged table (Spark drops tmp/_SUCCESS on
-            # completion — the roll-forward witness).
-            merged.write.mode("overwrite").parquet(jtmp.toString())
-            crashpoint("after_stage_write")
-            if _after_stage is not None:  # test-only interleave
-                _after_stage()
-            # Lease checkpoint: the stage write is the long pole, and a
-            # stage outliving lock_ttl_sec makes the lease stealable.
-            # Verify ownership (and re-arm the TTL) BEFORE the destructive
-            # renames — losing the lease here must abort, not interleave.
-            if not _hold_lease(spark, target_path, token):
-                raise MergeLockTimeout(
-                    f"merge lease on {target_path} lost during staging "
-                    f"(stage outlived lock_ttl_sec={lock_ttl_sec}); aborting "
-                    "before commit — another writer owns the table now"
-                )
-            # Step 3: move the old table aside (commit in flight).
-            if not fs.rename(jtarget, jbak):
-                raise OSError(f"rename {target_path} -> {jbak} failed")
-            crashpoint("after_backup_rename")
-            if _between_backup_and_commit is not None:  # test-only interleave
-                _between_backup_and_commit()
-            # Step 4: THE commit point.  A failed rename may RAISE rather
-            # than return false (RawLocalFileSystem's copy fallback throws
-            # FileNotFoundException on a vanished source) — both shapes
-            # mean "rename didn't happen", so both fall into the re-probe.
-            try:
-                committed = fs.rename(jtmp, jtarget)
-            except Exception:
-                committed = False
-            if not committed:
-                # A lock-free READER arriving between steps 3 and 4 sees a
-                # missing target and ROLLS OUR COMPLETE STAGE FORWARD
-                # itself (read_table → recover_table).  Re-probe: target
-                # present with tmp gone means OUR commit landed — finish
-                # cleanup and succeed rather than raising over a merge
-                # that actually committed.
-                if fs.exists(jtarget) and not fs.exists(jtmp):
-                    fs.delete(jbak, True)
-                    return
-                # roll back (same rule recovery applies).  The rollback
-                # rename itself can lose to a reader's roll-forward landing
-                # AFTER the re-probe above — so on rollback failure,
-                # re-probe ONCE MORE: target present with tmp gone means
-                # the merge actually committed; report success, not error.
-                try:
-                    rolled_back = fs.rename(jbak, jtarget)
-                except Exception:
-                    rolled_back = False
-                if not rolled_back and fs.exists(jtarget) and not fs.exists(jtmp):
-                    fs.delete(jbak, True)
-                    return
-                raise OSError(f"rename {jtmp} -> {target_path} failed")
-            crashpoint("after_commit_rename")
-            # Step 5: post-commit cleanup.
-            fs.delete(jbak, True)
-    finally:
-        if _held_token is None:
-            _release_lock(spark, target_path, token)
 
 
 def merge_upsert_partitioned(
@@ -914,11 +723,9 @@ def merge_upsert_partitioned(
 ) -> None:
     """MERGE INTO a parquet target partitioned by ``part_col``:
     partition-pruned read of only the touched partitions, staged
-    partitioned write, per-partition atomic rename swap (module doc,
-    "Commit protocol (partitioned path)").  Untouched partitions are
-    never read or written — a MERGE touching one day of a
-    year-partitioned 100 TB table costs one day, not the table.
-    Writers take the same lease as :func:`merge_upsert`.
+    partitioned write, one plan unit per touched partition (module
+    doc).  Untouched partitions are never read or written.  Writers
+    take the same lease as :func:`merge_upsert`.
 
     Assumes ``part_col`` is stable per key (a row never migrates
     between partitions) and NON-NULL — ``isin(touched)`` never matches
@@ -926,21 +733,17 @@ def merge_upsert_partitioned(
     the merge and then replaced by the swap: the source's null rows
     would stage into ``__HIVE_DEFAULT_PARTITION__``, enter the swap
     plan, and silently DELETE the target's existing null-partition
-    rows (the prior dynamic-overwrite path had the identical blind
-    spot; both are the standard partitioned-MERGE contract).  The
-    non-null half is ENFORCED, not just assumed: ``touched`` is
-    already collected on the driver, so a source containing a null
-    ``part_col`` raises :class:`ValueError` before any write — loudly,
-    where the silent-loss path used to begin.  ``part_col`` must be
+    rows (the standard partitioned-MERGE contract).  The non-null half
+    is ENFORCED, not just assumed: ``touched`` is already collected on
+    the driver, so a source containing a null ``part_col`` raises
+    :class:`ValueError` before any write.  ``part_col`` must be
     bounded-cardinality (it's a partition column), so collecting the
-    touched-partition values is driver-safe, and the per-partition
-    swap loop is a bounded sequence of metadata renames.
+    touched-partition values is driver-safe, and the swap is a bounded
+    sequence of metadata renames.
 
     ``_crash`` names a protocol step to die at (:class:`SimulatedCrash`,
-    same semantics as :func:`merge_upsert`): ``"after_stage_write"``,
-    ``"after_plan_write"``, ``"after_backup_rename:<i>"``,
-    ``"after_commit_rename:<i>"``, ``"after_bak_delete:<i>"``,
-    ``"before_ptmp_delete"``.
+    same semantics as :func:`merge_upsert`; the unit index ``<i>``
+    ranges over the touched partitions).
 
     On a Delta target the same touched-partition predicate goes into
     the MERGE condition, so Delta's file pruning skips untouched
@@ -955,14 +758,28 @@ def merge_upsert_partitioned(
             "without merging its rows (silent data loss); filter or "
             "default the null keys first"
         )
+    _merge(
+        spark, target_path, source, key, part_col, touched,
+        _crash, lock_ttl_sec, lock_wait_sec, None, _held_token,
+    )
+
+
+def _merge(
+    spark, target_path, source, key, part_col, touched,
+    _crash, lock_ttl_sec, lock_wait_sec, _after_stage, _held_token,
+) -> None:
+    """The one MERGE body behind both entry points: Delta dispatch,
+    lease, recovery, stage, plan, swap (module doc, steps 1-5).
+    ``part_col`` None means an unpartitioned target."""
     if HAVE_DELTA and DeltaTable.isDeltaTable(spark, target_path):  # pragma: no cover
-        # Column-built condition, not an f-string IN-list: repr() of a
-        # date/decimal partition value is not SQL (repr(date(1997,1,1))
-        # == 'datetime.date(1997, 1, 1)'), while isin() literal-encodes
-        # every Spark-supported type correctly.
-        cond = F.col(f"t.{part_col}").isin(touched) & (
-            F.col(f"t.{key}") == F.col(f"s.{key}")
-        )
+        cond = f"t.{key} = s.{key}"
+        if part_col is not None:
+            # Column-built, not an f-string IN-list: repr() of a
+            # date/decimal partition value is not SQL, while isin()
+            # literal-encodes every Spark-supported type correctly.
+            cond = F.col(f"t.{part_col}").isin(touched) & (
+                F.col(f"t.{key}") == F.col(f"s.{key}")
+            )
         (
             DeltaTable.forPath(spark, target_path)
             .alias("t")
@@ -977,8 +794,6 @@ def merge_upsert_partitioned(
         if _crash == step:
             raise SimulatedCrash(step)
 
-    from contextlib import nullcontext
-
     token = _held_token or _acquire_lock(
         spark, target_path, lock_ttl_sec, lock_wait_sec
     )
@@ -990,70 +805,66 @@ def merge_upsert_partitioned(
     try:
         with keeper:
             # Step 1: heal any prior crash before reading the target.
-            recover_table_partitioned(spark, target_path)
-            fs, jtarget, mk, jptmp, jplan, _ = _ppaths(spark, target_path)
-            target = spark.read.parquet(target_path).filter(F.col(part_col).isin(touched))
-            merged = _merged_frame(target, source, key)
-            # Step 2: stage the merged TOUCHED partitions off to the side —
-            # the live table is not written until the rename swaps.
-            # REBALANCE by the partition column (r17, guide §6): the
-            # join output's partitioning is the merge key's, so an
-            # unclustered partitionBy write emitted one file per
-            # (task x touched partition); the AQE rebalance clusters
-            # by partition value at the advisory size — few well-sized
-            # files per partition dir at any scale, skew-split if one
-            # partition value dominates.
-            (
-                merged.hint("rebalance", part_col)
-                .write.mode("overwrite")
-                .partitionBy(part_col)
-                .parquet(jptmp.toString())
-            )
+            if recover_table(spark, target_path) == "missing":
+                raise FileNotFoundError(f"merge target does not exist: {target_path}")
+            fs, _ = _fs(spark, target_path)
+            mk = spark._jvm.org.apache.hadoop.fs.Path
+            jptmp = _ptmp(mk, target_path)
+            target = spark.read.parquet(target_path)
+            # Step 2: stage the merged units off to the side — the live
+            # table is not written until the swap.
+            if part_col is None:
+                merged = _merged_frame(target, source, key)
+                merged.write.mode("overwrite").parquet(_ptmp(mk, target_path, _WHOLE).toString())
+                plan = [_WHOLE]
+            else:
+                target = target.filter(F.col(part_col).isin(touched))
+                merged = _merged_frame(target, source, key)
+                # REBALANCE by the partition column (r17, guide §6): the
+                # join output's partitioning is the merge key's, so an
+                # unclustered partitionBy write emitted one file per
+                # (task x touched partition); the AQE rebalance clusters
+                # by partition value at the advisory size, skew-split if
+                # one partition value dominates.
+                (
+                    merged.hint("rebalance", part_col)
+                    .write.mode("overwrite")
+                    .partitionBy(part_col)
+                    .parquet(jptmp.toString())
+                )
+                # unit names from the filesystem, not re-encoded from
+                # values: exactly what Spark's partitioning layer wrote
+                plan = sorted(
+                    st.getPath().getName()
+                    for st in fs.listStatus(jptmp)
+                    if st.isDirectory() and st.getPath().getName().startswith(part_col + "=")
+                )
             crashpoint("after_stage_write")
-            # Step 3: the plan — the staged partition dir names, taken from
-            # the filesystem (not re-encoded from values, so the names are
-            # exactly what Spark's partitioning layer wrote).  Written to a
-            # temp name and RENAMED into place: plan presence is the
-            # roll-forward authorization, so it must appear atomically — an
-            # in-place write crashed mid-flush would leave a TRUNCATED plan
-            # that recovery would treat as complete, rolling forward only a
-            # prefix of the touched partitions (a mixed old/new table).
-            plan = sorted(
-                st.getPath().getName()
-                for st in fs.listStatus(jptmp)
-                if st.isDirectory() and st.getPath().getName().startswith(part_col + "=")
-            )
-            jplan_tmp = mk(jplan.toString() + ".tmp")
+            if _after_stage is not None:  # test-only interleave
+                _after_stage()
+            # The stage write is the long pole: verify the lease (and
+            # re-arm its TTL) before the commit point — a writer that
+            # lost it must abort, not commit over the new owner.
+            if not _hold_lease(spark, target_path, token):
+                raise MergeLockTimeout(
+                    f"merge lease on {target_path} lost during staging "
+                    f"(stage outlived lock_ttl_sec={lock_ttl_sec}); aborting "
+                    "before commit — another writer owns the table now"
+                )
+            # Step 3: the plan, written to a temp name and RENAMED into
+            # place — it is the commit point, so it must appear
+            # atomically: a truncated in-place write would authorize
+            # rolling forward only a prefix of the units.
+            jplan_tmp = _ptmp(mk, target_path, _PLAN + ".tmp")
             out = fs.create(jplan_tmp, True)
             out.write(bytearray("\n".join(plan).encode()))
             out.close()
             crashpoint("after_plan_tmp_write")
-            if not fs.rename(jplan_tmp, jplan):
-                raise OSError(f"rename {jplan_tmp} -> {jplan} failed")
+            _rename(fs, jplan_tmp, _ptmp(mk, target_path, _PLAN))
             crashpoint("after_plan_write")
-            # Step 4: per-partition atomic swap.  The lease is re-verified
-            # (and its TTL re-armed) before the first destructive rename
-            # and on every iteration — ms-cost metadata reads against a
-            # swap loop that must never interleave with a takeover's.
-            for i, d in enumerate(plan):
-                if not _hold_lease(spark, target_path, token):
-                    raise MergeLockTimeout(
-                        f"merge lease on {target_path} lost during the "
-                        f"partition swap (step {i}/{len(plan)}); aborting — "
-                        "recovery resumes the swap from the plan file"
-                    )
-                jsrc = mk(jptmp.toString() + "/" + d)
-                jdst = mk(jtarget.toString() + "/" + d)
-                jbak = mk(jtarget.toString() + "/" + _BAK_PREFIX + d)
-                if fs.exists(jdst):
-                    if not fs.rename(jdst, jbak):
-                        raise OSError(f"rename {jdst} -> {jbak} failed")
-                crashpoint(f"after_backup_rename:{i}")
-                if not fs.rename(jsrc, jdst):
-                    raise OSError(f"rename {jsrc} -> {jdst} failed")
-                crashpoint(f"after_commit_rename:{i}")
-                fs.delete(jbak, True)
-                crashpoint(f"after_bak_delete:{i}")
+            # Step 4: swap each unit in under the lease.
+            units = [_unit(mk, target_path, d) for d in plan]
+            _swap(spark, fs, target_path, units, token, crashpoint)
             # Step 5: plan consumed — post-commit cleanup.
             crashpoint("before_ptmp_delete")
             fs.delete(jptmp, True)

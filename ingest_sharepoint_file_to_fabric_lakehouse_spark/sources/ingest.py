@@ -227,14 +227,19 @@ def run_ingest(
     # means the log append below can derive from the COMMITTED bronze
     # files instead of re-running the binaryFile scan + sha256 — at
     # 100 TB the content pass happens exactly once, and the read-back
-    # is column-pruned so content bytes are never re-read.  (The run
-    # counter is a driver-side listing of partition dirs; on a real
-    # lakehouse this is the same one FileSystem.listStatus call any
-    # committer makes.)
+    # is column-pruned so content bytes are never re-read.  The run id
+    # is 1 + the highest id listed (a driver-side listing — on a real
+    # lakehouse the same one FileSystem.listStatus call any committer
+    # makes), never the count of run dirs: once retention removes a run
+    # dir, a count would hand out a live run's id.  errorifexists turns
+    # any collision into an error instead of an overwrite.
     os.makedirs(bronze_path, exist_ok=True)
-    run_id = sum(1 for d in os.listdir(bronze_path) if d.startswith("ingest_run="))
+    run_id = 1 + max(
+        (int(d.split("=", 1)[1]) for d in os.listdir(bronze_path) if d.startswith("ingest_run=")),
+        default=-1,
+    )
     delta_path = os.path.join(bronze_path, f"ingest_run={run_id}")
-    landed.write.mode("overwrite").parquet(delta_path)
+    landed.write.mode("errorifexists").parquet(delta_path)
 
     # post-commit log append with timestamped archive names (A-16
     # :189-191): copy→verify→log ordering — the log row is derived from

@@ -6,7 +6,7 @@ manifest DataFrame; whole-file downloads (A-2) become ``binaryFile``
 scans; Graph JSON payloads (:55,65,76) become JSON-lines scans.
 
 CSV/JSON fixtures are derived deterministically from the parquet corpus
-into ``/tmp/sgdata/stage/`` (rewritten by the Spark query each run,
+into ``<core.STAGING_ROOT>/stage/`` (rewritten by the Spark query each run,
 overwrite mode) so the DuckDB oracle can read the very same files.  The
 staging path is deliberately scale-independent: each gate run writes
 from its own ``sf_dir`` immediately before the oracle reads it, so the
@@ -27,12 +27,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..core import query, staged_build, staging_dir, t
+from ..core import STAGING_ROOT, query, staged_build, staging_dir, t
 
-
-def _staging(sf_dir: str) -> str:
-    # sf_dir-independent on purpose — see module docstring.
-    return "/tmp/sgdata/stage"
+# sf_dir-independent on purpose — see module docstring.
+_STAGE = f"{STAGING_ROOT}/stage"
 
 
 @query(
@@ -55,16 +53,16 @@ def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scan_csv_schema",
-    """
+    f"""
     SELECT n_nationkey, n_name, n_regionkey
-    FROM read_csv('/tmp/sgdata/stage/nation_csv/*.csv', header=true,
-                  columns={'n_nationkey': 'INT', 'n_name': 'VARCHAR', 'n_regionkey': 'INT'})
+    FROM read_csv('{_STAGE}/nation_csv/*.csv', header=true,
+                  columns={{'n_nationkey': 'INT', 'n_name': 'VARCHAR', 'n_regionkey': 'INT'}})
     """,
 )
 def scan_csv_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV scan with an explicit declared schema (bronze sales files →
     typed table, config.py:13-17)."""
-    path = f"{_staging(sf_dir)}/nation_csv"
+    path = f"{_STAGE}/nation_csv"
     t(spark, sf_dir, "nation").coalesce(1).write.mode("overwrite").option("header", True).csv(path)
     schema = StructType(
         [
@@ -78,17 +76,17 @@ def scan_csv_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scan_json_lines",
-    """
+    f"""
     SELECT event_id, user_id, event_type
-    FROM read_json('/tmp/sgdata/stage/events_json/*.json',
-                   columns={'event_id': 'BIGINT', 'user_id': 'BIGINT', 'event_type': 'VARCHAR'})
+    FROM read_json('{_STAGE}/events_json/*.json',
+                   columns={{'event_id': 'BIGINT', 'user_id': 'BIGINT', 'event_type': 'VARCHAR'}})
     WHERE event_id < 2000
     """,
 )
 def scan_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines scan — the Graph-API payload shape
     (sharepoint_to_bronze_delta.py:55,65,76)."""
-    path = f"{_staging(sf_dir)}/events_json"
+    path = f"{_STAGE}/events_json"
     (
         t(spark, sf_dir, "events")
         .filter(F.col("event_id") < 2000)
@@ -124,7 +122,7 @@ def scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     blobs are deterministic (byte i repeated 100+i times), so the
     oracle is the literal expected (name, length, sha256) table.
     """
-    stage = f"{_staging(sf_dir)}/blobs"
+    stage = f"{_STAGE}/blobs"
     os.makedirs(stage, exist_ok=True)
     for i in range(8):
         with open(f"{stage}/doc_{i}.bin", "wb") as f:
@@ -387,7 +385,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..core import dec, money
 
-    base = f"{_staging(sf_dir)}/evolving_orders"
+    base = f"{_STAGE}/evolving_orders"
     o = t(spark, sf_dir, "orders")
     yr = F.year("o_orderdate")
     (
@@ -442,7 +440,7 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     PERMISSIVE + quarantine is the production default at 100 TB
     because a single bad row must never kill a million-file load.
     """
-    path = f"{_staging(sf_dir)}/csv_malformed"
+    path = f"{_STAGE}/csv_malformed"
     os.makedirs(path, exist_ok=True)
     fpath = f"{path}/data.csv"
     with open(fpath, "w") as fh:
@@ -537,7 +535,7 @@ def scan_parquet_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs only the leaves a query touches.  The oracle rebuilds the
     nesting relationally from the flat table.
     """
-    path = f"{_staging(sf_dir)}/docs_nested"
+    path = f"{_STAGE}/docs_nested"
     (
         t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 200)

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -115,3 +116,36 @@ def test_round_job_budget_and_log_schema(spark, tmp_path):
     on_disk = spark.read.parquet(os.path.join(bronze, "_ingestion_log"))
     assert log.schema == on_disk.schema
     assert log.count() == 10
+
+
+def test_removed_run_dir_never_reuses_a_live_run_id(spark, tmp_path):
+    """Retention removes ``ingest_run=0``; the next changed round must
+    land in a fresh run dir, not overwrite a committed run's bronze
+    rows that the log still lists."""
+    src, bronze = str(tmp_path / "sp"), str(tmp_path / "bronze")
+    runs = os.path.join(bronze, "bronze_files")
+    make_source_fixture(src)
+    changed = os.path.join(src, "shared", "notes.txt")
+
+    def land(i):
+        with open(changed, "ab") as f:
+            f.write(f" round {i}".encode())
+        os.utime(changed, (4102444800 + i, 4102444800 + i))
+        run_ingest(spark, src, bronze)
+
+    def run_dirs():
+        return sorted(d for d in os.listdir(runs) if d.startswith("ingest_run="))
+
+    def rows(d):
+        df = spark.read.parquet(os.path.join(runs, d))
+        return sorted(tuple(r) for r in df.select("folder_name", "file_name", "content_sha256").collect())
+
+    run_ingest(spark, src, bronze)
+    land(1)
+    land(2)
+    assert run_dirs() == ["ingest_run=0", "ingest_run=1", "ingest_run=2"]
+    before = {d: rows(d) for d in ("ingest_run=1", "ingest_run=2")}
+    shutil.rmtree(os.path.join(runs, "ingest_run=0"))
+    land(3)
+    assert run_dirs() == ["ingest_run=1", "ingest_run=2", "ingest_run=3"]
+    assert {d: rows(d) for d in before} == before

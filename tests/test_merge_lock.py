@@ -6,22 +6,27 @@ gaps the round-11 verdict/advice flagged:
   never lose a writer's rows;
 * a dead writer's lease must age out (stale-TTL takeover);
 * ``read_table`` must not disturb a live writer's staging dirs;
-* a reader that rolls the writer's complete stage forward mid-commit
-  must not make the writer raise over a merge that committed.
+* only the lease holder heals: a reader that finds the target missing
+  waits for the lease, and a held lease over a swap in flight makes
+  ``read_table`` fail loudly rather than return a partial table.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import threading
 
 import pytest
 
 from ingest_sharepoint_file_to_fabric_lakehouse_spark.plans.merge import (
     MergeLockTimeout,
+    SimulatedCrash,
     _acquire_lock,
     _release_lock,
+    merge_lease,
     merge_upsert,
+    merge_upsert_partitioned,
     read_table,
     recover_table,
 )
@@ -29,6 +34,13 @@ from ingest_sharepoint_file_to_fabric_lakehouse_spark.plans.merge import (
 
 def _seed(spark, path, rows):
     spark.createDataFrame(rows, "id long, v double").write.parquet(path)
+
+
+def _live_lock(path, token="live-writer"):
+    """A fresh lock file: what a live (or just-killed) writer's lease
+    looks like on disk."""
+    with open(path + "__merge_lock", "w") as fh:
+        fh.write(token)
 
 
 def test_two_concurrent_writers_serialize_and_both_land(spark, tmp_path):
@@ -109,45 +121,94 @@ def test_fresh_foreign_lease_is_respected(spark, tmp_path):
 
 def test_read_table_leaves_live_writers_staging_alone(spark, tmp_path):
     """Round-11 advice (medium): read_table used to run the stray-dir
-    sweep on EVERY read, deleting a live writer's in-progress
-    __merge_tmp (aborting its merge between steps 2-3).  With the
-    exists-gate, a read against a committed target must leave a
-    concurrent writer's tmp dir exactly as it found it."""
+    sweep on EVERY read, deleting a live writer's in-progress stage.
+    A live writer still staging (fresh lease, stage without a plan)
+    has not touched the target: the read returns it and leaves the
+    stage exactly as it found it."""
     path = str(tmp_path / "reader_iso")
     _seed(spark, path, [(1, 1.0)])
-    tmp_dir = path + "__merge_tmp"
-    os.makedirs(tmp_dir)
-    with open(tmp_dir + "/part-00000.parquet", "wb") as fh:
+    stage = path + "__merge_ptmp/_table"
+    os.makedirs(stage)
+    with open(stage + "/part-00000.parquet", "wb") as fh:
         fh.write(b"writer in progress")
+    _live_lock(path)
     got = {r.id: r.v for r in read_table(spark, path).collect()}
     assert got == {1: 1.0}
-    assert os.path.exists(tmp_dir + "/part-00000.parquet")
-    # explicit recovery (merge_upsert step 1) still sweeps it
-    assert recover_table(spark, path) == "committed"
-    assert not os.path.exists(tmp_dir)
+    assert os.path.exists(stage + "/part-00000.parquet")
+    os.remove(path + "__merge_lock")
+    # explicit recovery (merge_upsert step 1) discards the unplanned stage
+    assert recover_table(spark, path) == "rolled_back"
+    assert not os.path.exists(path + "__merge_ptmp")
 
 
-def test_writer_tolerates_reader_rollforward_between_renames(spark, tmp_path):
-    """A lock-free reader arriving between steps 3 and 4 sees a
-    missing target and rolls the writer's COMPLETE stage forward
-    itself.  The writer's step-4 rename then fails — it must re-probe,
-    recognize its own committed result, clean up bak, and return
-    success (round-11 advice: it used to raise OSError over a merge
-    that actually committed)."""
-    path = str(tmp_path / "rollforward")
+def test_reader_waits_for_lease_holder_with_target_missing(spark, tmp_path):
+    """A reader that arrives while a lease holder has the target
+    missing (mid-swap) must not heal under it: it waits for the lease,
+    then reads the complete NEW table the holder committed."""
+    import time as _time
+
+    path = str(tmp_path / "wait_holder")
     _seed(spark, path, [(1, 1.0), (2, 2.0)])
     src = spark.createDataFrame([(2, 25.0), (3, 3.0)], "id long, v double")
+    with pytest.raises(SimulatedCrash):
+        merge_upsert(spark, path, src, "id", _crash="after_backup_rename:0")
+    assert not os.path.exists(path)  # mid-swap: the old table is aside
+    result: dict = {}
 
-    def reader_interleave():
-        # what read_table does when it finds the target missing
-        assert recover_table(spark, path) == "rolled_forward"
+    def reader():
+        try:
+            result["got"] = {r.id: r.v for r in read_table(spark, path).collect()}
+            result["done"] = _time.monotonic()
+        except Exception as e:  # pragma: no cover - failure reporting
+            result["err"] = e
 
-    merge_upsert(
-        spark, path, src, "id", _between_backup_and_commit=reader_interleave
-    )
-    got = {r.id: r.v for r in read_table(spark, path).collect()}
-    assert got == {1: 1.0, 2: 25.0, 3: 3.0}
+    with merge_lease(spark, path, lock_wait_sec=5.0):
+        th = threading.Thread(target=reader)
+        th.start()
+        _time.sleep(0.3)
+        assert not result  # blocked on the lease, not healing
+        assert recover_table(spark, path) == "rolled_forward"  # the holder commits
+        healed = _time.monotonic()
+    th.join()
+    assert "err" not in result, result
+    assert result["got"] == {1: 1.0, 2: 25.0, 3: 3.0}
+    assert result["done"] > healed
     assert not [p for p in os.listdir(tmp_path) if "__merge_" in p]
+
+
+def test_read_table_fails_loudly_under_dead_writers_fresh_lease(spark, tmp_path):
+    """A writer killed mid-swap whose lease is still fresh blocks the
+    heal.  read_table must raise rather than return a partial table —
+    the unpartitioned target is missing, and the partitioned one lacks
+    the partition that was mid-rename.  Once the lease ages out, the
+    next read heals and returns the complete NEW table."""
+    old_mtime = 1_000_000_000
+    upath = str(tmp_path / "dead_u")
+    _seed(spark, upath, [(1, 1.0), (2, 2.0)])
+    src = spark.createDataFrame([(2, 25.0), (3, 3.0)], "id long, v double")
+    with pytest.raises(SimulatedCrash):
+        merge_upsert(spark, upath, src, "id", _crash="after_backup_rename:0")
+    ppath = str(tmp_path / "dead_p")
+    spark.createDataFrame(
+        [(1, 1, 10.0), (2, 2, 20.0)], "id long, p int, v double"
+    ).write.partitionBy("p").parquet(ppath)
+    psrc = spark.createDataFrame([(2, 2, 99.0)], "id long, p int, v double")
+    with pytest.raises(SimulatedCrash):
+        merge_upsert_partitioned(
+            spark, ppath, psrc, "id", "p", _crash="after_backup_rename:0"
+        )
+    assert not os.path.exists(ppath + "/p=2")  # the partial table
+    for path in (upath, ppath):
+        _live_lock(path, "dead-writer")
+        with pytest.raises(MergeLockTimeout, match="mid-commit"):
+            read_table(spark, path).collect()
+        os.utime(path + "__merge_lock", (old_mtime, old_mtime))
+    assert {r.id: r.v for r in read_table(spark, upath).collect()} == {
+        1: 1.0, 2: 25.0, 3: 3.0
+    }
+    assert {r.id: r.v for r in read_table(spark, ppath).collect()} == {1: 10.0, 2: 99.0}
+    assert not [p for p in os.listdir(tmp_path) if "__merge_" in p]
+    assert not [n for n in os.listdir(ppath) if n.startswith("_merge_bak_")]
 
 
 class _FakeDeltaTable:
@@ -218,8 +279,10 @@ def test_delta_dispatch_routes_merge_through_deltatable(spark, tmp_path, monkeyp
 def test_lease_lost_during_staging_aborts_before_commit(spark, tmp_path):
     """A stage write that outlives the TTL can have its lease stolen;
     the writer must detect the loss at the post-stage lease checkpoint
-    and abort with MergeLockTimeout BEFORE the destructive renames —
-    the target stays the thief's to commit, our rows never interleave."""
+    and abort with MergeLockTimeout BEFORE the plan rename (the commit
+    point) — the target stays the thief's to commit, our rows never
+    interleave, and the thief's recovery can never roll the abandoned
+    stage forward."""
     path = str(tmp_path / "lease_steal")
     _seed(spark, path, [(1, 1.0)])
     lock = path + "__merge_lock"
@@ -233,13 +296,15 @@ def test_lease_lost_during_staging_aborts_before_commit(spark, tmp_path):
     src = spark.createDataFrame([(2, 2.0)], "id long, v double")
     with pytest.raises(MergeLockTimeout, match="lost during staging"):
         merge_upsert(spark, path, src, "id", _after_stage=steal)
+    assert not os.path.exists(path + "__merge_ptmp/_MERGE_PLAN")
     # target untouched (old state), thief still owns the lease
     assert {r.id: r.v for r in read_table(spark, path).collect()} == {1: 1.0}
     with open(lock) as fh:
         assert fh.read() == "thief-token"
     os.remove(lock)
-    # the abandoned stage dir is ordinary crash debris: recovery sweeps it
-    assert recover_table(spark, path) == "committed"
+    # the abandoned, unplanned stage is ordinary crash debris: discarded
+    assert recover_table(spark, path) == "rolled_back"
+    assert {r.id: r.v for r in read_table(spark, path).collect()} == {1: 1.0}
     assert not [p for p in os.listdir(tmp_path) if "__merge_" in p]
 
 
@@ -331,22 +396,20 @@ def test_stale_lease_takeover_race_serializes(spark, tmp_path):
 
 
 def test_concurrent_readers_race_recovery_without_error(spark, tmp_path):
-    """Two readers arriving at the same crashed table (target missing,
-    complete stage present) both run recovery: one wins the
-    roll-forward rename, the loser must recognize the restored target
-    instead of erroring on its failed rename.  Both reads then return
-    the complete NEW table."""
-    import pandas as pd
-
+    """Two readers arriving at the same crashed table (target missing
+    mid-swap, complete plan present) race for the lease: the winner
+    rolls the swap forward, the other waits for the lease and finds
+    the table committed.  Neither errors; both reads return the
+    complete NEW table."""
     for seed in range(3):  # repeat: the interleave is scheduler-timed
         path = str(tmp_path / f"rr_{seed}")
         _seed(spark, path, [(1, 1.0), (2, 2.0)])
-        # forge the between-steps-3-and-4 crash state
+        # forge the crash state after the whole-table backup rename: a
+        # complete `_table` stage, the plan naming it, the target aside
+        shutil.copytree(path, path + "__merge_ptmp/_table")
+        with open(path + "__merge_ptmp/_MERGE_PLAN", "w") as fh:
+            fh.write("_table")
         os.rename(path, path + "__merge_bak")
-        shutil_src = path + "__merge_bak"
-        import shutil as _sh
-
-        _sh.copytree(shutil_src, path + "__merge_tmp")
         results, errs = [], []
 
         def reader():
@@ -362,6 +425,7 @@ def test_concurrent_readers_race_recovery_without_error(spark, tmp_path):
         assert not errs, errs
         assert results == [{1: 1.0, 2: 2.0}] * 2
         assert recover_table(spark, path) == "committed"
+        assert not [p for p in os.listdir(tmp_path) if "__merge_" in p]
 
 
 def test_merge_partitioned_crash_at_every_step_never_torn(spark, tmp_path):
@@ -375,7 +439,6 @@ def test_merge_partitioned_crash_at_every_step_never_torn(spark, tmp_path):
     from ingest_sharepoint_file_to_fabric_lakehouse_spark.plans.merge import (
         SimulatedCrash,
         merge_upsert_partitioned,
-        recover_table_partitioned,
     )
 
     old = {1: (1, 10.0), 2: (2, 20.0), 3: (3, 30.0)}
@@ -412,7 +475,7 @@ def test_merge_partitioned_crash_at_every_step_never_torn(spark, tmp_path):
         got = {r.id: (r.p, r.v) for r in read_table(spark, path).collect()}
         assert got == expected, (step, got)
         # recovery idempotent, debris gone, untouched partition intact
-        recover_table_partitioned(spark, path)
+        recover_table(spark, path)
         assert not [
             n for n in os.listdir(tmp_path) if "__merge_" in n
         ], step
@@ -433,10 +496,6 @@ def test_merge_partitioned_recovery_discards_incomplete_stage(spark, tmp_path):
     """A ptmp dir WITHOUT the plan+_SUCCESS pair is an unfinished stage:
     recovery must discard it and leave the old table intact (no swap
     ever started by protocol)."""
-    from ingest_sharepoint_file_to_fabric_lakehouse_spark.plans.merge import (
-        recover_table_partitioned,
-    )
-
     path = str(tmp_path / "pincomplete")
     spark.createDataFrame(
         [(1, 1, 10.0), (2, 2, 20.0)], "id long, p int, v double"
@@ -444,7 +503,7 @@ def test_merge_partitioned_recovery_discards_incomplete_stage(spark, tmp_path):
     os.makedirs(path + "__merge_ptmp/p=2")
     with open(path + "__merge_ptmp/p=2/part-00000.parquet", "wb") as fh:
         fh.write(b"torn stage")
-    assert recover_table_partitioned(spark, path) == "rolled_back"
+    assert recover_table(spark, path) == "rolled_back"
     assert not os.path.exists(path + "__merge_ptmp")
     got = {r.id: r.v for r in read_table(spark, path).collect()}
     assert got == {1: 10.0, 2: 20.0}
@@ -606,7 +665,6 @@ def test_merge_partitioned_randomized_crash_recovery_model(spark, tmp_path):
     from ingest_sharepoint_file_to_fabric_lakehouse_spark.plans.merge import (
         SimulatedCrash,
         merge_upsert_partitioned,
-        recover_table_partitioned,
     )
 
     for seed in range(6):
@@ -644,9 +702,53 @@ def test_merge_partitioned_randomized_crash_recovery_model(spark, tmp_path):
             merge_upsert_partitioned(spark, path, srcdf, "id", "p", _crash=step)
         got = {r.id: (r.p, r.v) for r in read_table(spark, path).collect()}
         assert got == expected, (seed, step, got)
-        recover_table_partitioned(spark, path)  # idempotent
+        recover_table(spark, path)  # idempotent
         merge_upsert_partitioned(spark, path, srcdf, "id", "p")
         got = {r.id: (r.p, r.v) for r in read_table(spark, path).collect()}
+        assert got == new, (seed, step)
+        assert not [n for n in os.listdir(tmp_path) if "__merge_" in n], step
+
+
+def test_merge_unpartitioned_randomized_crash_recovery_model(spark, tmp_path):
+    """The randomized crash property on the unpartitioned layout:
+    random seed table and source, crash at a random step of the shared
+    protocol, heal via read_table; the table equals the dict model —
+    complete OLD before the plan rename, complete NEW after — and a
+    retry always lands NEW."""
+    import random as _random
+
+    steps = [
+        "after_stage_write",
+        "after_plan_tmp_write",
+        "after_plan_write",
+        "after_backup_rename:0",
+        "after_commit_rename:0",
+        "after_bak_delete:0",
+        "before_ptmp_delete",
+    ]
+    for seed in range(4):
+        rnd = _random.Random(9000 + seed)
+        old = {
+            k: float(rnd.randint(0, 99))
+            for k in rnd.sample(range(40), rnd.randint(1, 10))
+        }
+        src = {
+            k: float(rnd.randint(100, 199))
+            for k in rnd.sample(range(40), rnd.randint(1, 8))
+        }
+        new = {**old, **src}
+        step = rnd.choice(steps)
+        expected = old if step in steps[:2] else new
+        path = str(tmp_path / f"ur_{seed}")
+        _seed(spark, path, list(old.items()))
+        srcdf = spark.createDataFrame(list(src.items()), "id long, v double")
+        with pytest.raises(SimulatedCrash):
+            merge_upsert(spark, path, srcdf, "id", _crash=step)
+        got = {r.id: r.v for r in read_table(spark, path).collect()}
+        assert got == expected, (seed, step, got)
+        assert recover_table(spark, path) == "committed"  # idempotent
+        merge_upsert(spark, path, srcdf, "id")
+        got = {r.id: r.v for r in read_table(spark, path).collect()}
         assert got == new, (seed, step)
         assert not [n for n in os.listdir(tmp_path) if "__merge_" in n], step
 

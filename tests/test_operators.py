@@ -201,17 +201,20 @@ def test_merge_upsert_crash_at_every_step_never_torn(spark, tmp_path):
 
     old = {1: 10.0, 2: 20.0}
     new = {1: 10.0, 2: 25.0, 3: 30.0}
+    # the unpartitioned target is the one-unit plan of the shared
+    # protocol: every step before the plan rename keeps the old table,
+    # every step after it rolls forward to the new one
     expect_after_crash = {
-        # staged but commit not started → recovery keeps the old table
-        "after_stage_write": old,
-        # between the renames with a complete (_SUCCESS) staged table
-        # → recovery rolls FORWARD
-        "after_backup_rename": new,
-        # committed, cleanup pending → new table, bak swept
-        "after_commit_rename": new,
+        "after_stage_write": old,  # staged, no plan → stage discarded
+        "after_plan_tmp_write": old,  # plan not yet renamed in
+        "after_plan_write": new,  # plan committed → roll forward
+        "after_backup_rename:0": new,  # target aside, stage complete
+        "after_commit_rename:0": new,  # swapped in, backup pending
+        "after_bak_delete:0": new,
+        "before_ptmp_delete": new,  # plan consumed, stage dir pending
     }
     for step, expected in expect_after_crash.items():
-        path = str(tmp_path / f"crash_{step}")
+        path = str(tmp_path / f"crash_{step.replace(':', '_')}")
         spark.createDataFrame(
             [(k, v) for k, v in old.items()], "id long, v double"
         ).write.parquet(path)
@@ -226,6 +229,7 @@ def test_merge_upsert_crash_at_every_step_never_torn(spark, tmp_path):
         import os
 
         assert not [p for p in os.listdir(tmp_path) if "__merge_" in p], step
+        assert not [p for p in os.listdir(path) if p.startswith("_merge_bak_")], step
         # a re-run (the normal retry) always lands the merged state
         merge_upsert(spark, path, src, "id")
         got = {r.id: r.v for r in read_table(spark, path).collect()}
@@ -233,9 +237,9 @@ def test_merge_upsert_crash_at_every_step_never_torn(spark, tmp_path):
 
 
 def test_merge_upsert_recovery_rolls_back_incomplete_stage(spark, tmp_path):
-    """Crash DURING the staged write (no _SUCCESS witness) with the
-    commit in flight: recovery must roll back to the old table, never
-    promote a half-written stage."""
+    """Crash with a half-written stage and a plan written but never
+    renamed into place (no commit point): recovery must roll back to
+    the old table, never promote the stage."""
     import os
     import shutil
 
@@ -243,12 +247,13 @@ def test_merge_upsert_recovery_rolls_back_incomplete_stage(spark, tmp_path):
 
     path = str(tmp_path / "rollback")
     spark.createDataFrame([(1, 1.0)], "id long, v double").write.parquet(path)
-    # Forge the crash state by hand: old table moved to bak, tmp dir
-    # present but WITHOUT _SUCCESS (write never finished).
-    os.rename(path, path + "__merge_bak")
-    os.makedirs(path + "__merge_tmp")
-    with open(path + "__merge_tmp/part-00000.parquet", "wb") as fh:
+    # Forge the crash state by hand: a torn staged unit and a plan that
+    # only reached its temp name.
+    os.makedirs(path + "__merge_ptmp/_table")
+    with open(path + "__merge_ptmp/_table/part-00000.parquet", "wb") as fh:
         fh.write(b"torn")
+    with open(path + "__merge_ptmp/_MERGE_PLAN.tmp", "w") as fh:
+        fh.write("_table")
     assert recover_table(spark, path) == "rolled_back"
     assert {r.id: r.v for r in read_table(spark, path).collect()} == {1: 1.0}
     assert not [p for p in os.listdir(tmp_path) if "__merge_" in p]
@@ -256,7 +261,7 @@ def test_merge_upsert_recovery_rolls_back_incomplete_stage(spark, tmp_path):
 
 
 def test_merge_upsert_cleans_staging_dirs(spark, tmp_path):
-    """The rename-swap MERGE must leave no __merge_tmp/__merge_bak."""
+    """The rename-swap MERGE must leave no stage, backup or lock."""
     import os
 
     from ingest_sharepoint_file_to_fabric_lakehouse_spark.plans.merge import merge_upsert

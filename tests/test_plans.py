@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import ingest_sharepoint_file_to_fabric_lakehouse_spark as engine
+from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import staging_dir
 
 engine.load_all()
 
@@ -196,11 +197,11 @@ def test_staged_layouts_rebuild_on_source_change(spark, tmp_path):
     os.chmod(sfc, 0o755)
     for f in os.listdir(sfc):
         os.chmod(os.path.join(sfc, f), 0o644)
-    shutil.rmtree("/tmp/sgdata/sfcopy", ignore_errors=True)
+    shutil.rmtree(staging_dir(sfc, ""), ignore_errors=True)
 
     fp1 = source_fingerprint(sfc, "orders")
     r1 = engine.QUERIES["scan_partition_pruned"](spark, sfc).collect()
-    staged = "/tmp/sgdata/sfcopy/orders_by_year"
+    staged = staging_dir(sfc, "orders_by_year")
     assert staging_current(staged, fp1)
 
     # "regenerate" the fixture: an mtime bump is what a rewritten file
@@ -214,7 +215,7 @@ def test_staged_layouts_rebuild_on_source_change(spark, tmp_path):
     r2 = engine.QUERIES["scan_partition_pruned"](spark, sfc).collect()
     assert staging_current(staged, fp2)
     assert r1 == r2
-    shutil.rmtree("/tmp/sgdata/sfcopy", ignore_errors=True)
+    shutil.rmtree(staging_dir(sfc, ""), ignore_errors=True)
 
 
 def test_skew_salted_join_is_shuffled_on_salted_key(spark, sf_dir):
@@ -262,8 +263,6 @@ def test_compaction_reduces_file_count(spark, sf_dir):
     """sink_compact_small_files: >=64 fragments in, <=4 files out,
     identical row count."""
     import glob
-
-    from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import staging_dir
 
     engine.QUERIES["sink_compact_small_files"](spark, sf_dir).collect()
     frag = glob.glob(f"{staging_dir(sf_dir, 'orders_fragmented')}/part-*")
@@ -378,11 +377,11 @@ def test_bm25_filters_terms_before_exchange(spark, sf_dir):
     assert "vector" in gen and "stream" in gen and "window" in gen
 
 
-def _clear_cooccur_staging():
+def _clear_cooccur_staging(sf_dir):
     import glob
     import shutil
 
-    for d in glob.glob("/tmp/sgdata/sf0.001/cooccur_idx_v1_*"):
+    for d in glob.glob(staging_dir(sf_dir, "cooccur_idx_v1_*")):
         shutil.rmtree(d, ignore_errors=True)
 
 
@@ -496,10 +495,9 @@ def test_staged_index_pass_equals_fresh_build_pass(spark, sf_dir):
         "dedup_lsh_eval": ["lsh_eval_truth_v1"],
         "sql_api_q2": ["tpch_supply_v1"],
     }
-    base = "/tmp/sgdata/sf0.001"
     for key, artifacts in staged_keys.items():
         for a in artifacts:
-            shutil.rmtree(f"{base}/{a}", ignore_errors=True)
+            shutil.rmtree(staging_dir(sf_dir, a), ignore_errors=True)
         # in-process codebook/centroid caches would mask a staging bug;
         # clear them so the cold pass truly rebuilds
         from ingest_sharepoint_file_to_fabric_lakehouse_spark.operators import (
@@ -829,7 +827,7 @@ def test_every_registered_query_is_driver_canonicalizable(spark):
     assert not offenders, offenders
 
 
-def test_kmeans_staged_codebook_matches_fresh_training(spark):
+def test_kmeans_staged_codebook_matches_fresh_training(spark, sf_dir):
     """sim_kmeans_build stages its trained codebook (fingerprint-gated,
     like the IVF/PPJoin layouts): the warm path must return results
     bit-identical to fresh training (parquet round-trips float64
@@ -842,8 +840,8 @@ def test_kmeans_staged_codebook_matches_fresh_training(spark):
         staging_current,
     )
 
-    sf = "/root/testdata/sf0.001"
-    staged = "/tmp/sgdata/sf0.001/kmeans_codebook_v1_k8_i2"
+    sf = sf_dir
+    staged = staging_dir(sf, "kmeans_codebook_v1_k8_i2")
     shutil.rmtree(staged, ignore_errors=True)
 
     fresh = engine.QUERIES["sim_kmeans_build"](spark, sf).collect()
@@ -880,14 +878,14 @@ def test_cooccurrence_guards_forced_on_are_visible_and_value_neutral(spark, sf_d
     plan = plan_of(guarded)
     assert "LeftSemi" in plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-    _clear_cooccur_staging()
+    _clear_cooccur_staging(sf_dir)
     g_rows = events_cooccurrence_lift(spark, sf_dir, min_support=2).collect()
-    _clear_cooccur_staging()
+    _clear_cooccur_staging(sf_dir)
     u_rows = events_cooccurrence_lift(spark, sf_dir, min_support=1).collect()
     assert g_rows == u_rows
 
 
-def test_cooccurrence_staged_index_matches_fresh_build(spark):
+def test_cooccurrence_staged_index_matches_fresh_build(spark, sf_dir):
     """events_cooccurrence_lift stages its scored pair relation
     (fingerprint-gated): warm output must be bit-identical to a fresh
     build (exact BIGINT counts round-trip parquet losslessly), and a
@@ -896,12 +894,12 @@ def test_cooccurrence_staged_index_matches_fresh_build(spark):
     import os
     import shutil
 
-    sf = "/root/testdata/sf0.001"
-    for d in glob.glob("/tmp/sgdata/sf0.001/cooccur_idx_v1_*"):
+    sf = sf_dir
+    for d in glob.glob(staging_dir(sf, "cooccur_idx_v1_*")):
         shutil.rmtree(d, ignore_errors=True)
 
     fresh = engine.QUERIES["events_cooccurrence_lift"](spark, sf).collect()
-    staged = glob.glob("/tmp/sgdata/sf0.001/cooccur_idx_v1_*")
+    staged = glob.glob(staging_dir(sf, "cooccur_idx_v1_*"))
     assert staged, "fresh run must stage the pair index"
 
     warm = engine.QUERIES["events_cooccurrence_lift"](spark, sf).collect()
@@ -913,7 +911,7 @@ def test_cooccurrence_staged_index_matches_fresh_build(spark):
     assert rebuilt == fresh
 
 
-def test_bm25_staged_index_matches_fresh_build(spark):
+def test_bm25_staged_index_matches_fresh_build(spark, sf_dir):
     """search_bm25/search_hybrid_rrf read a staged inverted index
     (posting lists + df + doc lengths + stats meta): warm output must
     be identical to a fresh build, and a stale stamp must rebuild."""
@@ -921,12 +919,12 @@ def test_bm25_staged_index_matches_fresh_build(spark):
     import os
     import shutil
 
-    sf = "/root/testdata/sf0.001"
-    for d in glob.glob("/tmp/sgdata/sf0.001/bm25_*"):
+    sf = sf_dir
+    for d in glob.glob(staging_dir(sf, "bm25_*")):
         shutil.rmtree(d, ignore_errors=True)
 
     fresh = engine.QUERIES["search_bm25"](spark, sf).collect()
-    staged = sorted(glob.glob("/tmp/sgdata/sf0.001/bm25_*"))
+    staged = sorted(glob.glob(staging_dir(sf, "bm25_*")))
     assert len(staged) == 3, staged
 
     warm = engine.QUERIES["search_bm25"](spark, sf).collect()

@@ -26,6 +26,7 @@ import pandas as pd
 import pytest
 
 import ingest_sharepoint_file_to_fabric_lakehouse_spark as engine
+from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import staging_dir
 
 engine.load_all()
 
@@ -38,7 +39,7 @@ MULT = 4
 @pytest.fixture(scope="module")
 def sf_dir_4x():
     shutil.rmtree(DST, ignore_errors=True)
-    shutil.rmtree(f"/tmp/sgdata/{os.path.basename(DST)}", ignore_errors=True)
+    shutil.rmtree(staging_dir(DST, ""), ignore_errors=True)
     os.makedirs(DST, exist_ok=True)
     base = pd.read_parquet(f"{SRC}/embeddings.parquet")
     out = [base]
@@ -56,7 +57,7 @@ def sf_dir_4x():
     )
     yield DST
     shutil.rmtree(DST, ignore_errors=True)
-    shutil.rmtree(f"/tmp/sgdata/{os.path.basename(DST)}", ignore_errors=True)
+    shutil.rmtree(staging_dir(DST, ""), ignore_errors=True)
 
 
 def _topk_sets(df):

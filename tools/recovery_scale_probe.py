@@ -1,18 +1,19 @@
-"""Measure recover_table_partitioned's roll-forward cost vs partition
-count (r13 verdict ask #7): the kill-matrix proves recovery CORRECT at
+"""Measure recover_table's roll-forward cost vs partition count on a
+partitioned target (r13 verdict ask #7): the kill-matrix proves recovery CORRECT at
 fixture scale; this probe makes its cost at scale a measured number.
 
 Setup per run: a target partitioned into P directories, a
 merge_upsert_partitioned touching ALL P partitions crashed at
 ``after_plan_write`` — the worst roll-forward state (every touched
 partition still in ptmp, the full plan to replay).  The probe times
-the healing ``recover_table_partitioned`` call at P and at 10 x P.
+the healing ``recover_table`` call at P and at 10 x P.
 Recovery is a bounded sequence of per-partition metadata renames, so
 wall time should scale ~linearly in P with a per-partition cost in the
 single-digit milliseconds — the recorded numbers let the scale story
 be checked, not assumed.
 
-Writes/merges the result under key ``recover_table_partitioned`` in
+Writes/merges the result under key ``recover_table_partitioned`` (the
+record's name since r13, kept so the series stays comparable) in
 tools/scale_smoke_x10.json.  Usage: python tools/recovery_scale_probe.py
 """
 
@@ -35,8 +36,8 @@ def probe(spark, parts: int) -> float:
     from ingest_sharepoint_file_to_fabric_lakehouse_spark.plans.merge import (
         SimulatedCrash,
         merge_upsert_partitioned,
-        recover_table_partitioned,
         read_table,
+        recover_table,
     )
 
     base = f"/tmp/sg_recovery_probe/p{parts}"
@@ -54,7 +55,7 @@ def probe(spark, parts: int) -> float:
     else:  # pragma: no cover - the crashpoint must fire
         raise AssertionError("crash injection did not fire")
     t0 = time.time()
-    recover_table_partitioned(spark, path)
+    recover_table(spark, path)
     dt = time.time() - t0
     # the roll-forward must have committed every partition's NEW rows
     got = read_table(spark, path).selectExpr("sum(v) s").collect()[0][0]
